@@ -3258,15 +3258,13 @@ object SparkEntry {
       // that scales with the partition count, not the data. State
       // partitions should track stateful-KEY cardinality (here: event
       // types x hour windows, user ids — tens), not core count. Sized
-      // scale-adaptively as min(defaultParallelism, 8) and overridable via
-      // GRAFT_STREAM_STATE_PARTS for deployments with wide key spaces;
-      // every gate is partition-count-invariant by construction (pinned by
-      // the InvarianceSpec matrix), so this changes no result. Restored
-      // after the streams finish so batch queries are untouched.
+      // scale-adaptively as min(defaultParallelism, 8); every gate is
+      // partition-count-invariant by construction (pinned by the
+      // InvarianceSpec matrix), so this changes no result. Restored after
+      // the streams finish so batch queries are untouched.
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_STATE_PARTS",
-          math.min(s.sparkContext.defaultParallelism, 8).toString))
+        math.min(s.sparkContext.defaultParallelism, 8).toString)
       val tag = java.lang.Long.toHexString(System.nanoTime())
       val outDir = java.nio.file.Files.createTempDirectory("graft_stream_out").toString
       // restore in a finally (ADVICE r21 item 1): Bench/Verify catch
@@ -3390,8 +3388,7 @@ object SparkEntry {
       // invariant (watermark = global max over prior batches)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_STREAM_STATE_PARTS",
-          math.min(s.sparkContext.defaultParallelism, 8).toString))
+        math.min(s.sparkContext.defaultParallelism, 8).toString)
       // restore in a finally (ADVICE r21 item 1): a failing stream must not
       // leave the shared session at 8 partitions for later queries
       try {

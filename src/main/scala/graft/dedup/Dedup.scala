@@ -44,6 +44,17 @@ object Dedup {
     numHashes / bands
   }
 
+  /** One `_band` row per LSH band of `sig` — the candidate key every
+    * MinHash/sketch dedup path joins on. */
+  private[graft] def bandKeys(sig: Column, numHashes: Int, bands: Int): Column =
+    explode(gf.lshBandKeys(sig, bands, bandRows(numHashes, bands))).as("_band")
+
+  /** MinHash similarity estimate of two signatures: the fraction of the
+    * `numHashes` slots that match — the verify step behind every band
+    * candidate. */
+  private[graft] def slotMatch(a: Column, b: Column, numHashes: Int): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), m => m)).cast("double") / numHashes
+
   /**
    * Exact dedup: group by content hash, keep the smallest id per group.
    * One shuffle on a 192-bit key (xxhash64 + md5); map-side partial
@@ -147,7 +158,6 @@ object Dedup {
                       shingleSize: Int = 5, numHashes: Int = 16,
                       bands: Int = 4, threshold: Double = 0.5,
                       signature: Option[Column => Column] = None): DataFrame = {
-    val rows = bandRows(numHashes, bands)
     val sigFn = signature.getOrElse((t: Column) =>
       gf.minhashSignature(gf.wordShingles(t, shingleSize), numHashes))
     val sig = rebalance(df.select(col(id).as("_id"), col(text).as("_t")))
@@ -170,13 +180,11 @@ object Dedup {
     // sketch runs once and both sides read the same reused exchange;
     // (b) the join arrives pre-partitioned, so no further shuffle.
     val banded = groups
-      .select(col("_sig"), col("_ids"),
-        explode(gf.lshBandKeys(col("_sig"), bands, rows)).as("_band"))
+      .select(col("_sig"), col("_ids"), bandKeys(col("_sig"), numHashes, bands))
       .repartition(col("_band"))
     val a = banded.select(col("_band"), col("_sig").as("sigA"), col("_ids").as("idsA"))
     val b = banded.select(col("_band"), col("_sig").as("sigB"), col("_ids").as("idsB"))
-    val est = size(filter(zip_with(col("sigA"), col("sigB"), (x, y) => x === y), m => m))
-      .cast("double") / numHashes
+    val est = slotMatch(col("sigA"), col("sigB"), numHashes)
     val inter = a.join(b, Seq("_band"))
       .where(col("sigA") < col("sigB")) // arrays compare lexicographically
       .select(col("sigA"), col("sigB"), col("idsA"), col("idsB"), est.as("est_jaccard"))
@@ -232,7 +240,6 @@ object Dedup {
                      shingleSize: Int = 5, numHashes: Int = 16,
                      bands: Int = 4, threshold: Double = 0.5,
                      signature: Option[Column => Column] = None): DataFrame = {
-    val rows = bandRows(numHashes, bands)
     val sigFn = signature.getOrElse((t: Column) =>
       gf.minhashSignature(gf.wordShingles(t, shingleSize), numHashes))
     val hashed = batch
@@ -251,13 +258,11 @@ object Dedup {
       .localCheckpoint(false)
     val bGroups = bsig.groupBy(col("_sig")).agg(collect_list(col("_id")).as("_ids"))
     val bBands = bGroups.select(col("_sig"), col("_ids"),
-      explode(gf.lshBandKeys(col("_sig"), bands, rows)).as("_band"))
+      bandKeys(col("_sig"), numHashes, bands))
     val hBands = history.select(col("sig")).dropDuplicates("sig")
-      .select(col("sig"), explode(gf.lshBandKeys(col("sig"), bands, rows)).as("_band"))
-    val est = size(filter(zip_with(col("_sig"), col("sig"), (x, y) => x === y),
-      m => m)).cast("double") / numHashes
+      .select(col("sig"), bandKeys(col("sig"), numHashes, bands))
     val dropSigs = bBands.join(hBands, Seq("_band"))
-      .where(est >= threshold)
+      .where(slotMatch(col("_sig"), col("sig"), numHashes) >= threshold)
       .select(col("_sig")).dropDuplicates("_sig")
     val survIds = bGroups.join(dropSigs, Seq("_sig"), "left_anti")
       .select(explode(col("_ids")).as(id))
@@ -315,21 +320,19 @@ object Dedup {
   private[graft] def minhashLshKeepIds(sig: DataFrame, id: String,
                                        numHashes: Int, bands: Int,
                                        threshold: Double): DataFrame = {
-    val rows = bandRows(numHashes, bands)
     val groups = sig.where(col("_sig").isNotNull)
       .groupBy(col("_sig")).agg(min(col("_id")).as("_min"))
     // repartition = shuffle barrier + the self-join arrives co-partitioned
     val banded = groups
-      .select(col("_sig"), col("_min"),
-        explode(gf.lshBandKeys(col("_sig"), bands, rows)).as("_band"))
+      .select(col("_sig"), col("_min"), bandKeys(col("_sig"), numHashes, bands))
       .repartition(col("_band"))
     val a = banded.select(col("_band"), col("_sig").as("sigA"), col("_min").as("minA"))
     val b = banded.select(col("_band"), col("_sig").as("sigB"), col("_min").as("minB"))
-    val est = size(filter(zip_with(col("sigA"), col("sigB"), (x, y) => x === y), m => m))
-      .cast("double") / numHashes
+    // two rows sharing an id land in different groups when their
+    // signatures differ: an id must never be dropped by its own copy
     val crossDrops = a.join(b, Seq("_band"))
-      .where(col("sigA") < col("sigB"))
-      .where(est >= threshold)
+      .where(col("sigA") < col("sigB") && !(col("minA") <=> col("minB")))
+      .where(slotMatch(col("sigA"), col("sigB"), numHashes) >= threshold)
       .select(greatest(col("minA"), col("minB")).as(id))
     // no distinct() on crossDrops: left_anti tolerates duplicate keys, and
     // the dedup exchange would cost more than the duplicates it removes

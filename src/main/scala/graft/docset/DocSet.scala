@@ -568,28 +568,38 @@ final class DocSet(val ds: Dataset[Document]) extends Serializable {
 
   /** K-Means over the embedding column via MLlib (reference hand-rolls the
     * loop over Ray, transforms/clustering.py:4-74; MLlib's implementation is
-    * the battle-tested distributed one). Returns centroids. */
+    * the battle-tested distributed one). Returns centroids: at most k, and
+    * at most one per distinct embedding. */
   def kmeans(k: Int, maxIter: Int = 20, seed: Long = 42L): Seq[Seq[Double]] = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val feats = ds.toDF().where(col("embedding").isNotNull)
-      .select(array_to_vector(col("embedding")).as("features"))
-    val model = new KMeans().setK(k).setMaxIter(maxIter).setSeed(seed).fit(feats)
-    model.clusterCenters.toSeq.map(_.toArray.toSeq)
+    val embedded = ds.toDF().where(col("embedding").isNotNull).select(col("embedding"))
+    // MLlib indexes k centres even when seeding finds fewer distinct points
+    // (ArrayIndexOutOfBounds). Below k distinct points each point is its
+    // own centroid, the cost-0 optimum; sorted so cluster ids do not
+    // depend on partitioning.
+    val few = embedded.distinct().limit(k).collect()
+    if (few.length < k)
+      few.map(_.getSeq[Float](0).map(_.toDouble)).toSeq.sortBy(_.mkString(","))
+    else {
+      val feats = embedded.select(array_to_vector(col("embedding")).as("features"))
+      val model = new KMeans().setK(k).setMaxIter(maxIter).setSeed(seed).fit(feats)
+      model.clusterCenters.toSeq.map(_.toArray.toSeq)
+    }
   }
 
   /** Assign nearest-centroid id into properties.cluster
     * (reference: docset.py:1082 clustering). */
   def clustering(centroids: Seq[Seq[Double]], property: String = "cluster"): DocSet = map { d =>
     d.embedding match {
-      case Some(v) =>
+      case Some(v) if centroids.nonEmpty =>
         val cid = centroids.zipWithIndex.minBy { case (c, _) =>
           var s = 0.0; var i = 0
           while (i < c.length) { val diff = c(i) - v(i); s += diff * diff; i += 1 }
           s
         }._2
         d.withProp(property, cid.toString)
-      case None => d
+      case _ => d
     }
   }
 
@@ -613,28 +623,19 @@ final class DocSet(val ds: Dataset[Document]) extends Serializable {
     */
   def sketchDedup(bands: Int = 4, threshold: Double = 0.4,
                   numHashes: Int = 16): DocSet = {
-    // numHashes MUST match sketch(number) and bands must divide it; docs
-    // whose sketch length differs are not comparable on this band layout
-    // and are KEPT (banding past a shorter signature would throw, and a
-    // hardcoded 16 silently ignored slots of a wider sketch)
-    val rows = graft.dedup.Dedup.bandRows(numHashes, bands)
-    val sk = ds.toDF().where(col("shingles").isNotNull &&
-      size(col("shingles")) === numHashes)
-    // repartition on the band: one shuffle, self-join arrives co-partitioned
-    val banded = sk.select(col("docId"), col("shingles"),
-      org.apache.spark.sql.functions.explode(
-        graft.functions.gf.lshBandKeys(col("shingles"), bands, rows)).as("band"))
-      .repartition(col("band"))
-    val a = banded.select(col("band"), col("docId").as("idA"), col("shingles").as("sA"))
-    val b = banded.select(col("band"), col("docId").as("idB"), col("shingles").as("sB"))
-    val dist = lit(1.0) -
-      size(org.apache.spark.sql.functions.filter(
-        zip_with(col("sA"), col("sB"), (x, y) => x === y), m => m)).cast("double") /
-      size(col("sA"))
-    val dropIds = a.join(b, Seq("band"))
-      .where(col("idA") < col("idB") && dist <= threshold)
-      .select(col("idB").as("docId")).distinct()
-    wrap(ds.toDF().join(dropIds, Seq("docId"), "left_anti").as[Document](docEnc))
+    // Dedup's keep-set drops exactly the docs with a verified band
+    // neighbour of smaller docId, joining one row per distinct sketch;
+    // distance <= threshold is estimate >= 1 - threshold. numHashes MUST
+    // match sketch(number): a sketch of another length is not comparable
+    // on this band layout, so it becomes a null signature and is KEPT.
+    // Lazily checkpointed: the keep-set reads sig from several branches,
+    // each of which would otherwise re-run the whole upstream pipeline.
+    val sig = ds.toDF().select(col("docId").as("_id"),
+        when(size(col("shingles")) === numHashes, col("shingles")).as("_sig"))
+      .localCheckpoint(false)
+    val keep = graft.dedup.Dedup.minhashLshKeepIds(sig, "docId", numHashes, bands,
+      1.0 - threshold)
+    wrap(ds.toDF().join(keep, Seq("docId"), "left_semi").as[Document](docEnc))
   }
 
   /** Rerank by a similarity scorer then sort desc

@@ -126,13 +126,8 @@ object PageRank {
     //    holds |nodes|/partitions rows; it degraded cleanly where
     //  - persist UNHINTED dies: AQE broadcasts the scores EVERY ROUND and
     //    the accumulated broadcasts blow the cap (UNABLE_TO_ACQUIRE_MEMORY).
-    // So the hint is both the fast and the memory-safe choice; overridable
-    // for deployments that want planner-chosen strategies.
-    val hinted = sys.env.getOrElse("GRAFT_PR_JOIN_HINT", "shuffle_hash") match {
-      case "none" => None
-      case other  => Some(other)
-    }
-    def h(df: DataFrame): DataFrame = hinted.foldLeft(df)(_ hint _)
+    // So the hint is both the fast and the memory-safe choice.
+    def h(df: DataFrame): DataFrame = df.hint("shuffle_hash")
     var i = 0
     while (i < iterations) {
       val contrib = e

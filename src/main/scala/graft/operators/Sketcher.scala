@@ -8,8 +8,9 @@ import scala.util.hashing.MurmurHash3
  * sketch is `number` min-hashes over a rolling character window of length
  * `window`.
  *
- * The typed (Document) twin of gf.minhashSignature; DocSet.sketchDedup does
- * the LSH banding — replacing the reference's O(n^2) SketchUniquify.
+ * The typed (Document) twin of gf.minhashSignature. DocSet.sketchDedup
+ * dedups these sketches with Dedup's MinHash-LSH keep-set (band join over
+ * distinct sketches) in place of the reference's O(n^2) SketchUniquify.
  */
 object Sketcher {
 

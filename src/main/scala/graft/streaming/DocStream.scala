@@ -142,7 +142,6 @@ object DocStream {
     import graft.functions.gf
     import graft.dedup.Dedup
     val spark = batch.spark
-    val rows = graft.dedup.Dedup.bandRows(numHashes, bands)
     val df = batch.toDF
     // the sketch is the hot path: compute each doc's signature ONCE,
     // checkpoint it, and drive BOTH the within-batch dedup and the
@@ -162,8 +161,7 @@ object DocStream {
       .localCheckpoint() // consumed by the banded join AND the kept-id anti-join
     val banded = sigCk.join(intraKeep, Seq("_id"), "left_semi")
       .where(col("_sig").isNotNull)
-      .select(col("_id"), col("_sig"),
-        explode(gf.lshBandKeys(col("_sig"), bands, rows)).as("_band"))
+      .select(col("_id"), col("_sig"), Dedup.bandKeys(col("_sig"), numHashes, bands))
     // (2) cross-batch: any band hit against the log with est >= threshold.
     // The log carries the KEEPER'S doc id so a retried batch cannot drop
     // its own documents against the signatures it logged before failing
@@ -189,10 +187,9 @@ object DocStream {
       } else banded.select(col("_band"), col("_sig").as("_storeSig"),
         col("_id").as("_storeId")).limit(0)
     }
-    val est = size(filter(zip_with(col("_sig"), col("_storeSig"),
-      (x, y) => x === y), m => m)).cast("double") / numHashes
     val dropped = banded.join(store, Seq("_band"))
-      .where(!(col("_id") <=> col("_storeId")) && est >= threshold)
+      .where(!(col("_id") <=> col("_storeId")) &&
+        Dedup.slotMatch(col("_sig"), col("_storeSig"), numHashes) >= threshold)
       .select(col("_id")).distinct()
     // keptIds is consumed by BOTH the log write and the kept-docs join —
     // checkpoint the (small, id-only) set so the store join runs once

@@ -116,6 +116,22 @@ class DedupAnnSpec extends AnyFunSuite {
     }
   }
 
+  test("minhashLsh never drops an id through its own near-duplicate copy") {
+    // two rows share id 7 with near-duplicate, non-identical texts: the
+    // cross-group drop must not pit the id against itself
+    val texts = corpus.orderBy("doc_id").select("text").as[String].collect()
+    val docs = Seq((7L, texts(0)), (7L, texts(2)), (9L, texts(3))).toDF("doc_id", "text")
+    val kept = Dedup.minhashLsh(docs, "doc_id", "text",
+        shingleSize = 3, numHashes = 16, bands = 8, threshold = 0.3)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(kept == Seq(7L, 7L, 9L))
+    val sig = Seq((7L, (1L to 16L).toArray), (7L, ((1L to 15L) :+ 999L).toArray),
+      (9L, (101L to 116L).toArray)).toDF("_id", "_sig")
+    val keepIds = Dedup.minhashLshKeepIds(sig, "doc_id", 16, 4, 0.5)
+      .as[Long].collect().toSet
+    assert(keepIds == Set(7L, 9L))
+  }
+
   test("connectedComponents matches union-find on random graphs and long paths") {
     // path graph: the adversarial depth case — greedy one-hop labeling fails,
     // large-star/small-star must close it within O(log n) rounds

@@ -116,4 +116,18 @@ class EmbedLlmSpec extends AnyFunSuite {
       _.flatMap(_.prop("cluster")).toSet).toMap
     assert(byText(true).size == 1 && byText(false).size == 1 && byText(true) != byText(false))
   }
+
+  test("kmeans with k above the embedded-doc count: at most that many centroids") {
+    val three = DocSet.of(spark, Seq("alpha beta gamma", "omega psi chi", "spark query plan")
+      .zipWithIndex.map { case (t, i) => Document.of(s"d$i", text = t) })
+      .embed(new HashEmbedder(16))
+    val c3 = three.kmeans(5)
+    assert(c3.nonEmpty && c3.size <= 3)
+    assert(three.clustering(c3).takeAll().forall(_.prop("cluster").isDefined))
+    // no embedded docs at all: no centroids, and clustering assigns nothing
+    val none = DocSet.of(spark, Seq(Document.of("n0", text = "not embedded")))
+    val c0 = none.kmeans(5)
+    assert(c0.isEmpty)
+    assert(none.clustering(c0).takeAll().forall(_.prop("cluster").isEmpty))
+  }
 }

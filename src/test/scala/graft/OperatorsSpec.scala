@@ -134,6 +134,33 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out.map(_.docId).sorted == Seq("x1", "x2"))
   }
 
+  test("sketchDedup keeps only the smallest docId of 50 text-less docs") {
+    // text-less parents all sketch the empty string: one signature class
+    val docs = (0 until 50).map(i => Document.of(f"p$i%02d"))
+    val out = DocSet.of(spark, docs).sketch().sketchDedup().takeAll()
+    assert(out.map(_.docId) == Seq("p00"))
+  }
+
+  test("sketchDedup keeps docs with no sketch or a sketch of the wrong length") {
+    def doc(id: String, slots: Option[Array[Long]]) =
+      Document.of(id).copy(shingles = slots)
+    val full = (1L to 16L).toArray
+    val docs = Seq(doc("a", Some(full)), doc("b", None), doc("c", None),
+      doc("d", Some(full.take(8))), doc("e", Some(full.take(8))))
+    val out = DocSet.of(spark, docs).sketchDedup().takeAll()
+    assert(out.map(_.docId).sorted == Seq("a", "b", "c", "d", "e"))
+  }
+
+  test("sketchDedup at threshold 0.25 drops a 12-of-16 match, keeps 11-of-16") {
+    def doc(id: String, slots: Seq[Long]) =
+      Document.of(id).copy(shingles = Some(slots.toArray))
+    val k1 = doc("k1", 1L to 16L)
+    val k2 = doc("k2", (1L to 12L) ++ (901L to 904L)) // distance 0.25 to k1
+    val k3 = doc("k3", (1L to 11L) ++ (801L to 805L)) // 0.3125 to k1 and k2
+    val out = DocSet.of(spark, Seq(k1, k2, k3)).sketchDedup(threshold = 0.25).takeAll()
+    assert(out.map(_.docId).sorted == Seq("k1", "k3"))
+  }
+
   test("sampleByHash is deterministic and partition-independent") {
     val docs = (0 until 500).map(i => Document.of(i.toString, text = s"doc $i"))
     val ds1 = DocSet.of(spark, docs).sampleByHash(0.2)
