@@ -13,16 +13,19 @@ import graft.functions.gf
  * All take/return DataFrames so they compose with any schema; `id` and `text`
  * are column names in `df`.
  *
- * Deployment note on multi-branch plans: operators whose plan consumes a
- * sketch/signature subtree from more than one branch (minhashLsh's band join
- * + keep set, simhashPairs' intra + chunk branches) get identical branches
- * deduplicated by AQE stage reuse, but branches with different column sets
- * are recomputed — Catalyst prunes each copy differently, so the subtrees
- * stop being equal. The pipelines here keep that recompute to at most one
- * extra pass over the sketch aggregate (never the raw corpus per branch —
- * see ngramJaccardPairs for the single-scan pattern). When one pass matters
- * at full corpus scale, persist the input (or the signature projection) and
- * every branch reads the cached blocks instead.
+ * Deployment note on multi-branch plans: AQE merges only identical
+ * branches, and Catalyst prunes each branch of a plan to its own column set,
+ * so two branches over the same input re-run the whole upstream plan (the
+ * scan and every filter and sketch above it) once each. The operators that
+ * consume their input from more than one branch — minhashLsh (keep-set +
+ * semi-join side), decontaminate and decontaminateBloom (shingle branch +
+ * anti-join side) — therefore read it ONCE themselves, through a
+ * `localCheckpoint` that every branch reads (lazy in minhashLsh: the first
+ * job fills it; eager in decontamination, see dropContaminatedRows); its
+ * blocks are released by the ContextCleaner when the result frame is
+ * garbage-collected. Callers need not persist their input. dedupIncrement
+ * checkpoints its signatures the same way but reads the batch twice, as do
+ * exactRows/exactRowsKeepBest (ROADMAP, Carried).
  */
 object Dedup {
 
@@ -288,6 +291,9 @@ object Dedup {
    * lists, and the dropDuplicates + double-explode tail of the pairs path
    * (the round-2 bench regression) disappears while producing the
    * identical kept set.
+   *
+   * The input is read once: a lazy `localCheckpoint(false)` that the
+   * keep-set job fills and the semi-join side reads.
    */
   def minhashLsh(df: DataFrame, id: String, text: String,
                  shingleSize: Int = 5, numHashes: Int = 16,
@@ -295,9 +301,10 @@ object Dedup {
                  signature: Option[Column => Column] = None): DataFrame = {
     val sigFn = signature.getOrElse((t: Column) =>
       gf.minhashSignature(gf.wordShingles(t, shingleSize), numHashes))
-    val sig = rebalance(df.select(col(id).as("_id"), col(text).as("_t")))
+    val in = df.localCheckpoint(false)
+    val sig = rebalance(in.select(col(id).as("_id"), col(text).as("_t")))
       .select(col("_id"), sigFn(col("_t")).as("_sig"))
-    df.join(minhashLshKeepIds(sig, id, numHashes, bands, threshold),
+    in.join(minhashLshKeepIds(sig, id, numHashes, bands, threshold),
       Seq(id), "left_semi")
   }
 
@@ -874,17 +881,39 @@ object Dedup {
    * least one n-gram shingle with the benchmark set. The benchmark side is
    * broadcast — test sets are small by construction; the corpus is touched
    * by one scan + one semi-join + one anti-join, no corpus self-join.
+   *
+   * The rule applies per ROW, not per `id`: a contaminated row with a
+   * null id is dropped, and a clean row sharing its id with a contaminated
+   * one is kept. `id` names the document id but takes no part in the match.
    */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, id: String,
                     text: String, n: Int = 8): DataFrame = {
-    val cSh = corpus.select(col(id).as("_id"),
-      explode(array_distinct(gf.wordShingles(col(text), n))).as("_sh"))
     val bSh = benchmark
       .select(explode(array_distinct(gf.wordShingles(col(text), n))).as("_sh"))
       .distinct()
-    val contaminated = cSh.join(broadcast(bSh), Seq("_sh"), "left_semi")
-      .select(col("_id")).distinct()
-    corpus.join(contaminated, corpus(id) === contaminated("_id"), "left_anti")
+    dropContaminatedRows(corpus, text, n)(_.join(broadcast(bSh), Seq("_sh"), "left_semi"))
+  }
+
+  /** Drop every corpus row for which `hits` keeps one of its (_row, _sh)
+    * shingle rows. Each row gets a surrogate key, and ONE eager checkpoint
+    * stores every row with its surrogate before either branch is planned:
+    * the shingle branch and the anti-join side then read the same stored
+    * rows, so the input plan runs once and the position-dependent
+    * `monotonically_increasing_id` is computed once per row. A lazy
+    * checkpoint would not do: the two branches are separate map stages that
+    * AQE submits concurrently, so on several executors (or under
+    * speculation) a partition could be computed twice, in two row orders
+    * after an upstream shuffle, and give a row two surrogates. Matching on
+    * the surrogate, a null or shared document id cannot make a contaminated
+    * row survive or a clean row drop. */
+  private def dropContaminatedRows(corpus: DataFrame, text: String, n: Int)
+                                  (hits: DataFrame => DataFrame): DataFrame = {
+    val rows = corpus.withColumn("_row", monotonically_increasing_id())
+      .localCheckpoint()
+    val cSh = rows.select(col("_row"),
+      explode(array_distinct(gf.wordShingles(col(text), n))).as("_sh"))
+    val contaminated = hits(cSh).select(col("_row")).distinct()
+    rows.join(contaminated, Seq("_row"), "left_anti").drop("_row")
   }
 
   /**
@@ -955,12 +984,8 @@ object Dedup {
     val mightContain = org.apache.spark.sql.graft.ColumnBridge.column(
       graft.functions.BloomMightContainExpr(
         org.apache.spark.sql.graft.ColumnBridge.expression(col("_sh")), bf))
-    val cSh = corpus.select(col(id).as("_id"),
-      explode(array_distinct(gf.wordShingles(col(text), n))).as("_sh"))
-    val contaminated = cSh.where(mightContain)
-      .join(bSh, Seq("_sh"), "left_semi")
-      .select(col("_id")).distinct()
-    corpus.join(contaminated, corpus(id) === contaminated("_id"), "left_anti")
+    dropContaminatedRows(corpus, text, n)(
+      _.where(mightContain).join(bSh, Seq("_sh"), "left_semi"))
   }
 
   /**

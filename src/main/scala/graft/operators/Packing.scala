@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -119,17 +120,30 @@ object Packing {
    * stream, the first and last chunk it lands in, and its offset within the
    * first chunk. A document spanning a chunk boundary is split across
    * chunks — exactly what a pretraining loader does.
+   *
+   * The input is read once: the range partitioner's bound-sampling job
+   * fills a lazy `localCheckpoint(false)` of `df`, and the staging
+   * checkpoint job reads those rows instead of re-running the upstream
+   * plan. Once the staged rows are stored, the input copy is released at
+   * once rather than at the driver's next GC, so the step holds one stored
+   * copy of the corpus at the end, not two.
    */
   def packSequences(df: DataFrame, order: String, tokenCol: Column,
                     contextLen: Int): DataFrame = {
     require(contextLen > 0, "contextLen must be positive")
     val parts = df.sparkSession.sparkContext.defaultParallelism
-    val staged = df
+    val in = df.localCheckpoint(false)
+    val staged = in
       .repartitionByRange(parts, col(order))
       .sortWithinPartitions(col(order))
       // null token count = empty doc (0 tokens), not a null-poisoned span
       .withColumn("_w", coalesce(tokenCol.cast("long"), lit(0L)))
       .localCheckpoint()
+    // staged holds every row now: drop the input copy, not at the next GC
+    in.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
     // zero-shuffle finish: in-partition fold seeded by the broadcast
     // offsets (see withRunningTotal) — no pid re-shuffle, no window
     val out = withRunningTotal(staged, "_w", "_cum", prefixOffsets(staged))

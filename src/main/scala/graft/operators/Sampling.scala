@@ -30,7 +30,26 @@ object Sampling {
       gf.polyFingerprint(concat(k, lit(":"), lit(salt), lit(":"), k)), lit(10000L))
     val fracs = map(fractions.toSeq.sortBy(_._1)
       .flatMap { case (s, f) => Seq(lit(s), lit(math.round(f * 10000))) }: _*)
-    df.where(bucket < element_at(fracs, col(stratum)))
+    // the map is keyed by string: cast the stratum (a no-op for strings)
+    df.where(bucket < element_at(fracs, col(stratum).cast("string")))
+  }
+
+  /** The mixtures' driver pass: collect one long aggregate `agg` per
+    * non-null stratum, keyed by the stratum cast to string (stratum-sized:
+    * languages/sources number in the dozens, not the corpus scale). Strata
+    * whose aggregate is null are skipped. `df` is read once: the collect
+    * fills a lazy `localCheckpoint(false)` of it, and the mixture's filter
+    * reads those rows (the returned frame) instead of re-running the input
+    * plan. */
+  private def strataTotals(df: DataFrame, stratum: String,
+                           agg: Column): (DataFrame, Map[String, Long]) = {
+    val in = df.localCheckpoint(false)
+    val totals = in.groupBy(col(stratum).cast("string").as("_s"))
+      .agg(agg.as("_t"))
+      .collect().collect {
+        case r if !r.isNullAt(0) && !r.isNullAt(1) => r.getString(0) -> r.getLong(1)
+      }.toMap
+    (in, totals)
   }
 
   /**
@@ -75,19 +94,6 @@ object Sampling {
   }
 
   /**
-   * Token-budget data mixture (the "data mixing" stage of a pretraining
-   * pipeline: hit per-source/per-language token targets, e.g. rebalance a
-   * web-heavy crawl): per-stratum keep fractions are DERIVED from the
-   * observed token mass — fraction(s) = min(1, budget(s) / tokens(s)) — and
-   * applied with the deterministic hash rule above, so the mixture is
-   * reproducible across engines and re-runs. Strata without a budget are
-   * dropped; strata under their budget keep everything.
-   *
-   * One aggregation pass for the per-stratum token totals (the collect is
-   * bounded by the stratum count — languages/sources number in the dozens,
-   * not the corpus scale) + one shuffle-free filter scan.
-   */
-  /**
    * Temperature-scaled source mixture (the multilingual-sampling policy of
    * mT5/XLM-R: draw probability ∝ count^α, α < 1 flattening the source
    * distribution so head sources stop drowning the tail). Expected draw
@@ -103,8 +109,9 @@ object Sampling {
    * reason Stats.scala refuses float variance). Published α=0.5 fits;
    * α=0.3-style presets round to the nearest quarter.
    *
-   * Scale: one stratum-level count aggregate to the driver (stratum
-   * cardinality-bounded); the keep rule is pure per-row codegen.
+   * Scale: the input is read once — one stratum-level count aggregate to
+   * the driver (stratum cardinality-bounded, see `strataTotals`); the keep
+   * rule is pure per-row codegen over the same materialised rows.
    */
   def temperatureMixture(df: DataFrame, key: String, stratum: String,
                          budgetDocs: Long, alphaQuarters: Int,
@@ -112,11 +119,7 @@ object Sampling {
     require(alphaQuarters >= 1 && alphaQuarters <= 4,
       s"alphaQuarters must be in 1..4, got $alphaQuarters")
     require(budgetDocs >= 0, "budget must be non-negative")
-    val counts = df.groupBy(col(stratum).cast("string").as("_s"))
-      .agg(count(lit(1)).as("_c"))
-      .collect().collect {
-        case r if !r.isNullAt(0) => r.getString(0) -> r.getLong(1)
-      }.toMap
+    val (in, counts) = strataTotals(df, stratum, count(lit(1)))
     if (counts.isEmpty) return df.limit(0)
     def w(c: Long): Double = {
       val r2 = math.sqrt(c.toDouble)
@@ -135,27 +138,36 @@ object Sampling {
     val fractions = keys.map { s =>
       s -> math.min(1.0, budgetDocs.toDouble * w(counts(s)) / sumw / counts(s))
     }.toMap
-    stratifiedByHash(df, key, stratum, fractions, salt)
+    stratifiedByHash(in, key, stratum, fractions, salt)
   }
 
+  /**
+   * Token-budget data mixture (the "data mixing" stage of a pretraining
+   * pipeline: hit per-source/per-language token targets, e.g. rebalance a
+   * web-heavy crawl): per-stratum keep fractions are DERIVED from the
+   * observed token mass — fraction(s) = min(1, budget(s) / tokens(s)) — and
+   * applied with the deterministic hash rule above, so the mixture is
+   * reproducible across engines and re-runs. Strata without a budget are
+   * dropped; strata under their budget keep everything.
+   *
+   * Scale: the input is read once — one aggregation pass collects the
+   * per-stratum token totals (stratum-sized, see `strataTotals`), then a
+   * shuffle-free filter reads the same materialised rows.
+   */
   def tokenBudgetMixture(df: DataFrame, key: String, stratum: String,
                          tokens: Column, budgets: Map[String, Long],
                          salt: String = ""): DataFrame = {
     require(budgets.nonEmpty, "need at least one stratum budget")
-    // a stratum whose every row has null tokens sums to null — skip it
-    // (don't NPE on getLong); zero-token strata stay, with fraction
+    // a stratum whose every row has null tokens sums to null and is
+    // skipped by strataTotals; zero-token strata stay, with fraction
     // min(1, b/0 = Inf) = 1 — they consume no budget, same as the oracle's
     // least(1.0, x/0) semantics
-    val totals = df.groupBy(col(stratum).cast("string").as("_s"))
-      .agg(sum(tokens.cast("long")).as("_t"))
-      .collect().collect {
-        case r if !r.isNullAt(0) && !r.isNullAt(1) => r.getString(0) -> r.getLong(1)
-      }.toMap
+    val (in, totals) = strataTotals(df, stratum, sum(tokens.cast("long")))
     val fractions = budgets.flatMap { case (s, b) =>
       totals.get(s).map(t => s -> math.min(1.0, b.toDouble / t))
     }
     if (fractions.isEmpty) df.limit(0)
-    else stratifiedByHash(df, key, stratum, fractions, salt)
+    else stratifiedByHash(in, key, stratum, fractions, salt)
   }
 
   /**
@@ -173,8 +185,9 @@ object Sampling {
    * copies; strata without a budget are dropped (tokenBudgetMixture's
    * contract).
    *
-   * Scale: one stratum-sized aggregate to the driver + a row-local
-   * explode of `sequence(0, copies-1)` — output-bounded, no shuffle.
+   * Scale: the input is read once — one stratum-sized aggregate to the
+   * driver (`strataTotals`), then a row-local explode of
+   * `sequence(0, copies-1)` over the same rows — output-bounded, no shuffle.
    * `maxEpochs` guards against a misconfigured budget exploding a row
    * into millions of copies (a budget 1000× the corpus is a config bug,
    * not a mixture).
@@ -184,12 +197,8 @@ object Sampling {
                    salt: String = "", maxEpochs: Int = 1000): DataFrame = {
     require(budgets.nonEmpty, "need at least one stratum budget")
     require(maxEpochs >= 1, s"maxEpochs must be positive: $maxEpochs")
-    val totals = df.groupBy(col(stratum).cast("string").as("_s"))
-      .agg(sum(tokens.cast("long")).as("_t"))
-      .collect().collect {
-        case r if !r.isNullAt(0) && !r.isNullAt(1) && r.getLong(1) > 0 =>
-          r.getString(0) -> r.getLong(1)
-      }.toMap
+    val (in, allTotals) = strataTotals(df, stratum, sum(tokens.cast("long")))
+    val totals = allTotals.filter(_._2 > 0)
     // exact integer basis points (floor); budget*10000 must stay in long —
     // enforced loudly, since a 920T-token stratum budget is conceivable at
     // extreme scale and a silent overflow would flip ebp negative (every
@@ -211,7 +220,7 @@ object Sampling {
       gf.polyFingerprint(concat(k, lit(":"), lit(salt), lit(":"), k)), lit(10000L))
     val em = map(ebp.toSeq.sortBy(_._1)
       .flatMap { case (s, e) => Seq(lit(s), lit(e)) }: _*)
-    df.withColumn("_ebp", element_at(em, col(stratum).cast("string")))
+    in.withColumn("_ebp", element_at(em, col(stratum).cast("string")))
       // DIV: exact integral division (never double floor); null _ebp
       // (unbudgeted stratum) nulls copies and the filter drops the row
       .withColumn("_copies",

@@ -36,7 +36,9 @@ class CollectCensusSpec extends AnyFunSuite {
     "graft/ann/Ann.scala" -> (3, 0),
     "graft/plan/QueryExecutor.scala" -> (2, 0),
     "graft/dedup/Dedup.scala" -> (1, 1),
-    "graft/operators/Sampling.scala" -> (3, 0),
+    // the three mixtures share one stratum-sized totals collect
+    // (strataTotals, SURVEY §6 row 15)
+    "graft/operators/Sampling.scala" -> (1, 0),
     "graft/operators/Packing.scala" -> (3, 0),
     "graft/operators/Dsir.scala" -> (2, 0),
     // r21: Stats gained the histogram-selection walks (valuesAtRanks x2,

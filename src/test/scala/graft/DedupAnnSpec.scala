@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ann.Ann
 import graft.dedup.Dedup
@@ -281,6 +282,25 @@ class DedupAnnSpec extends AnyFunSuite {
     val kept = Dedup.decontaminate(corpusDf, bench, "doc_id", "text", n = 4)
       .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(1L, 2L)) // doc 0 shares "the quick brown fox"
+  }
+
+  test("decontaminate applies its rule per row: null ids drop, shared ids keep clean rows") {
+    val item = "watch the quick brown fox run"
+    val bench = Seq(("t0", item)).toDF("doc_id", "text")
+    val clean = "completely clean document here today"
+    // a contaminated row with a null id; a clean row sharing id "a" with a
+    // contaminated one
+    val corpusDf = Seq[(String, String)](
+      ("a", "some prefix text " + item), (null, "foo bar " + item),
+      ("a", "a clean row under the same id"), ("b", clean)).toDF("doc_id", "text")
+    for (op <- Seq[(DataFrame, DataFrame) => DataFrame](
+        Dedup.decontaminate(_, _, "doc_id", "text", n = 4),
+        Dedup.decontaminateBloom(_, _, "doc_id", "text", n = 4))) {
+      val out = op(corpusDf, bench)
+      assert(out.columns.toSeq == Seq("doc_id", "text"))
+      assert(out.as[(String, String)].collect().toSet ==
+        Set(("a", "a clean row under the same id"), ("b", clean)))
+    }
   }
 
   test("bm25 ranks term-bearing docs above term-free docs, tf-monotone") {

@@ -1907,6 +1907,25 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out.toSet == again.toSet)
   }
 
+  test("the three mixtures accept a non-string stratum (int year)") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val df = (0L until 90L).map(i => (i, 2020 + (i % 3).toInt, "w " * (5 + (i % 4).toInt)))
+      .toDF("id", "year", "text")
+    val asString = df.withColumn("year", col("year").cast("string"))
+    val toks = graft.functions.gf.tokenCount(col("text"))
+    val budgets = Map("2020" -> 60L, "2021" -> 400L)
+    val mixtures: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "tokenBudgetMixture" -> (Sampling.tokenBudgetMixture(_, "id", "year", toks, budgets, "y")),
+      "epochMixture" -> (Sampling.epochMixture(_, "id", "year", toks, budgets, "y")),
+      "temperatureMixture" -> (Sampling.temperatureMixture(_, "id", "year", 40L, 2, "y")))
+    for ((name, f) <- mixtures) {
+      val got = f(df).select("id").as[Long].collect().sorted.toSeq
+      val want = f(asString).select("id").as[Long].collect().sorted.toSeq
+      assert(got.nonEmpty && got == want, s"$name: int stratum differs from its string form")
+    }
+  }
+
   test("sortedNeighborhood: window pairs over the global key order") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
