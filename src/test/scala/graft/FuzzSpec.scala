@@ -16,21 +16,33 @@ import graft.sources.Warc
  * (r18 brief #1). r17 found three poison-pill classes — OOM-bomb spans,
  * NumberFormatException task kills, an infinite recursion — by HAND
  * review; this finds the rest mechanically: flip/truncate/splice/zero/
- * insert/duplicate bytes of the real fixture corpus, N >= 200 mutants per
+ * insert/duplicate bytes of a seed document, N >= 200 mutants per
  * format, and require every parser to DEGRADE — return, in bounded time,
  * with bounded output — never hang, throw, or OOM the task. This is the
  * crawl-ingest robustness a 100 TB WARC pipeline lives on (reference
  * contract: the tolerant paths of transforms/detr_partitioner.py and
  * partition.py — garbage in a corpus must cost one document, not a job).
  *
+ * Seeds come from two places, as (format, offset) pairs:
+ *  - generated in this file, run on every machine: pptx 5, warc 8,
+ *    warc.gz 9, ppm 10, bmp 11, wav 13, gfv 14, png 15 (an ImageIO-written
+ *    raster), and the Sniff seeds sniff:pptx 22 … sniff:gfv 27,
+ *    sniff:pdf 28, sniff:html 29;
+ *  - read from the reference fixture corpus at `FixtureGoldenGen.DataDir`,
+ *    run only where the files exist (the test cancels otherwise, naming the
+ *    missing file): pdf 1, pdf+tables 2, html 3, docx 4, text 6 (with the
+ *    generated vtt 7 in the same test), png-fixture 12,
+ *    sniff:pdf-fixture 20, sniff:html-fixture 21, and the partitionAuto
+ *    mixed corpus (one shared stream at offset 99).
+ *
  * Reproducibility: every mutant derives from a FIXED seed; a failure
- * message carries the format, mutant index, and mutation descriptor, so
- * `mutantOf(seedBytes, new Random(SeedBase + formatSeed), i)` replays it
- * exactly.
+ * message carries the format, its offset, the mutant index and the
+ * mutation descriptor. Mutant i of a pair is the (i+1)-th call of
+ * `mutantOf(seedBytes, rnd)` on one `rnd = new Random(SeedBase + offset)`,
+ * so replaying mutants 0..i in order reproduces it exactly.
  */
 class FuzzSpec extends AnyFunSuite {
   private val DataDir = FixtureGoldenGen.DataDir
-  private def available: Boolean = new java.io.File(DataDir).isDirectory
 
   private val SeedBase = 0x18C0FFEEL
   private val N = 220
@@ -152,31 +164,79 @@ class FuzzSpec extends AnyFunSuite {
     var i = 0
     while (i < n) {
       val (desc, bytes) = mutantOf(seed, rnd)
-      val out = bounded(s"$fmt mutant #$i [$desc] len=${bytes.length}")(parse(bytes))
-      assert(out <= MaxOutBytes,
-        s"$fmt mutant #$i [$desc]: output $out bytes exceeds cap (expansion bug)")
+      val what = s"$fmt (offset $seedOffset) mutant #$i [$desc]"
+      val out = bounded(s"$what len=${bytes.length}")(parse(bytes))
+      assert(out <= MaxOutBytes, s"$what: output $out bytes exceeds cap (expansion bug)")
       i += 1
     }
   }
 
   // ---------------------------------------------------------- seed corpus
 
-  private def fileBytes(path: String): Array[Byte] =
-    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+  private val PdfFixture = "pdfs/visit_aryn.pdf"
+  private val DocxFixture = "docx/aryn_website_sample.docx"
+  private val PngFixture = "imgs/vert_table.png"
+  private val HtmlFixture = "htmls/wikipedia_binary_search.html"
+  private val TextFixture = "texts/Ray.txt"
 
-  private lazy val pdfSeed = fileBytes(s"$DataDir/pdfs/visit_aryn.pdf")
-  private lazy val docxSeed = fileBytes(s"$DataDir/docx/aryn_website_sample.docx")
-  private lazy val pngSeed = fileBytes(s"$DataDir/imgs/vert_table.png")
+  private def fixturePath(rel: String): java.nio.file.Path =
+    java.nio.file.Paths.get(DataDir, rel)
+
+  /** Cancel, naming the missing file, unless every listed fixture exists:
+    * a partial corpus cancels the test instead of throwing
+    * NoSuchFileException from a seed read. */
+  private def assumeFixture(rel: String*): Unit = rel.map(fixturePath).foreach { p =>
+    assume(java.nio.file.Files.isRegularFile(p), s"$p not present")
+  }
+
+  private def fixtureBytes(rel: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(fixturePath(rel))
+
+  private lazy val pdfSeed = fixtureBytes(PdfFixture)
+  private lazy val docxSeed = fixtureBytes(DocxFixture)
+  private lazy val pngFixtureSeed = fixtureBytes(PngFixture)
   /** HTML seed: the structured head of the wikipedia fixture (full file is
     * 470 KB; 96 KB keeps 220 mutants fast while spanning real tag soup). */
   private lazy val htmlSeed = {
-    val full = fileBytes(s"$DataDir/htmls/wikipedia_binary_search.html")
+    val full = fixtureBytes(HtmlFixture)
     java.util.Arrays.copyOfRange(full, 0, math.min(full.length, 96 << 10)) ++
       "</body></html>".getBytes("UTF-8")
   }
   private lazy val textSeed = {
-    val full = fileBytes(s"$DataDir/texts/Ray.txt")
+    val full = fixtureBytes(TextFixture)
     java.util.Arrays.copyOfRange(full, 0, math.min(full.length, 32 << 10))
+  }
+
+  /** Small synthesized PDF (the StructureSpec shape): MediaBox object + one
+    * uncompressed content stream of positioned text. */
+  private lazy val genPdfSeed: Array[Byte] = {
+    val content = ("BT /F1 12 Tf 1 0 0 1 72 700 Tm (Fuzz seed title) Tj ET\n" +
+      "BT 14 TL 72 660 Td (first body line) Tj T* (second body line) Tj ET\n" +
+      "BT 72 600 Td <48657821> Tj ET").getBytes("ISO-8859-1")
+    ("%PDF-1.4\n1 0 obj << /MediaBox [0 0 612 792] >> endobj\n" +
+      "2 0 obj << /Length " + content.length + " >>\nstream\n").getBytes("ISO-8859-1") ++
+      content ++ "\nendstream\nendobj\ntrailer\n%%EOF".getBytes("ISO-8859-1")
+  }
+
+  /** Small synthesized HTML page: doctype, head, headings, list, table. */
+  private lazy val genHtmlSeed: Array[Byte] = (
+    "<!DOCTYPE html><html><head><title>Fuzz seed</title></head><body>\n" +
+      "<h1>Binary search</h1><p>Binary search finds a target in a sorted array.</p>\n" +
+      "<ul><li>halve the interval</li><li>compare the middle</li></ul>\n" +
+      "<table><tr><th>n</th><th>steps</th></tr><tr><td>1024</td><td>10</td></tr></table>\n" +
+      "<p>See <a href=\"https://example.com/a\">the reference</a>.</p>\n" +
+      "</body></html>").getBytes("UTF-8")
+
+  /** 16x12 RGB raster written as PNG by ImageIO (the MediaSpec encoding):
+    * exercises the MediaOps.decodeImageIo path without a fixture file. */
+  private lazy val pngSeed: Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(16, 12,
+      java.awt.image.BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 12; x <- 0 until 16)
+      img.setRGB(x, y, ((x * 16) << 16) | ((y * 20) << 8) | 0x40)
+    val bos = new java.io.ByteArrayOutputStream()
+    require(javax.imageio.ImageIO.write(img, "png", bos), "no ImageIO PNG writer")
+    bos.toByteArray
   }
 
   /** Small synthesized PPTX (design.pptx is 3.7 MB — too slow for 220
@@ -281,7 +341,7 @@ class FuzzSpec extends AnyFunSuite {
   // -------------------------------------------------------------- suites
 
   test("fuzz: PdfPartitioner survives mutated PDFs (text + table paths)") {
-    assume(available)
+    assumeFixture(PdfFixture)
     val base = new PdfPartitioner()
     fuzzFormat("pdf", pdfSeed, 1)(b => outBytes(base.partition(doc("m.pdf", b))))
     val withTables = new PdfPartitioner(
@@ -291,13 +351,13 @@ class FuzzSpec extends AnyFunSuite {
   }
 
   test("fuzz: HtmlPartitioner survives mutated HTML (tables + links on)") {
-    assume(available)
+    assumeFixture(HtmlFixture)
     val p = new HtmlPartitioner(extractTables = true, trackLinks = true)
     fuzzFormat("html", htmlSeed, 3)(b => outBytes(p.partition(doc("m.html", b))))
   }
 
   test("fuzz: DocxPartitioner survives mutated DOCX") {
-    assume(available)
+    assumeFixture(DocxFixture)
     val p = new DocxPartitioner()
     fuzzFormat("docx", docxSeed, 4)(b => outBytes(p.partition(doc("m.docx", b))))
   }
@@ -308,7 +368,7 @@ class FuzzSpec extends AnyFunSuite {
   }
 
   test("fuzz: Text/Transcript partitioners survive mutated text") {
-    assume(available)
+    assumeFixture(TextFixture)
     val t = new TextPartitioner()
     fuzzFormat("text", textSeed, 6)(b => outBytes(t.partition(doc("m.txt", b))))
     val v = new TranscriptPartitioner()
@@ -322,13 +382,14 @@ class FuzzSpec extends AnyFunSuite {
       Warc.records(b).foldLeft(0L)((a, r) => a + r.payload.length))
   }
 
+  private def rasterBytes(b: Array[Byte]): Long =
+    MediaOps.decode(b).map(i => i.width.toLong * i.height * 4).getOrElse(0L)
+
   test("fuzz: raster/audio/video decoders survive mutated media") {
-    fuzzFormat("ppm", ppmSeed, 10)(b =>
-      MediaOps.decode(b).map(i => i.width.toLong * i.height * 4).getOrElse(0L))
-    fuzzFormat("bmp", bmpSeed, 11)(b =>
-      MediaOps.decode(b).map(i => i.width.toLong * i.height * 4).getOrElse(0L))
-    fuzzFormat("png", pngSeed, 12)(b =>
-      MediaOps.decode(b).map(i => i.width.toLong * i.height * 4).getOrElse(0L))
+    assert(MediaOps.decode(pngSeed).exists(_.width == 16), "PNG seed must decode")
+    fuzzFormat("ppm", ppmSeed, 10)(rasterBytes)
+    fuzzFormat("bmp", bmpSeed, 11)(rasterBytes)
+    fuzzFormat("png", pngSeed, 15)(rasterBytes)
     fuzzFormat("wav", wavSeed, 13)(b =>
       AudioOps.decodeWav(b).map(_.samples.length.toLong * 4).getOrElse(0L))
     val sampler = new MediaOps.FakeFrameSampler
@@ -336,16 +397,31 @@ class FuzzSpec extends AnyFunSuite {
       sampler.sampleFrames(b, 2).foldLeft(0L)(_ + _.length))
   }
 
-  test("fuzz: Sniff.sniff survives every format's mutants") {
-    val seeds = Seq(pdfSeed, htmlSeed, pptxSeed, warcSeed, ppmSeed, bmpSeed,
-      wavSeed, videoSeed)
-    seeds.zipWithIndex.foreach { case (s, i) =>
-      fuzzFormat(s"sniff#$i", s, 20 + i, n = 60)(b => Sniff.sniff(b).length.toLong)
+  test("fuzz: PNG decoder survives mutated fixture PNG") {
+    assumeFixture(PngFixture)
+    fuzzFormat("png-fixture", pngFixtureSeed, 12)(rasterBytes)
+  }
+
+  private def fuzzSniff(seeds: (String, Array[Byte], Long)*): Unit =
+    seeds.foreach { case (name, seed, offset) =>
+      fuzzFormat(s"sniff:$name", seed, offset, n = 60)(b => Sniff.sniff(b).length.toLong)
     }
+
+  test("fuzz: Sniff.sniff survives every format's mutants") {
+    assert(Sniff.sniff(genPdfSeed) == "pdf" && Sniff.sniff(genHtmlSeed) == "html",
+      "generated seeds must reach the pdf and html sniff branches")
+    fuzzSniff(("pptx", pptxSeed, 22), ("warc", warcSeed, 23), ("ppm", ppmSeed, 24),
+      ("bmp", bmpSeed, 25), ("wav", wavSeed, 26), ("gfv", videoSeed, 27),
+      ("pdf", genPdfSeed, 28), ("html", genHtmlSeed, 29))
+  }
+
+  test("fuzz: Sniff.sniff survives fixture PDF/HTML mutants") {
+    assumeFixture(PdfFixture, HtmlFixture)
+    fuzzSniff(("pdf-fixture", pdfSeed, 20), ("html-fixture", htmlSeed, 21))
   }
 
   test("fuzz: partitionAuto over a mixed mutant corpus — no task death") {
-    assume(available)
+    assumeFixture(PdfFixture, HtmlFixture, DocxFixture, TextFixture)
     // the engine-level assertion the brief asks for: the SAME mutants,
     // through the real Spark path, one batch — a single poisoned document
     // must degrade in place, not kill its task (and with it the job)
