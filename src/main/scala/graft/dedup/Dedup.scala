@@ -17,15 +17,16 @@ import graft.functions.gf
  * branches, and Catalyst prunes each branch of a plan to its own column set,
  * so two branches over the same input re-run the whole upstream plan (the
  * scan and every filter and sketch above it) once each. The operators that
- * consume their input from more than one branch — minhashLsh (keep-set +
- * semi-join side), decontaminate and decontaminateBloom (shingle branch +
- * anti-join side) — therefore read it ONCE themselves, through a
- * `localCheckpoint` that every branch reads (lazy in minhashLsh: the first
- * job fills it; eager in decontamination, see dropContaminatedRows); its
- * blocks are released by the ContextCleaner when the result frame is
- * garbage-collected. Callers need not persist their input. dedupIncrement
- * checkpoints its signatures the same way but reads the batch twice, as do
- * exactRows/exactRowsKeepBest (ROADMAP, Carried).
+ * consume their input from more than one branch — minhashLsh and
+ * DocSet.sketchDedup (keep-set + semi-join side), exactRows and
+ * exactRowsKeepBest (aggregate side + semi-join side + null-text union),
+ * decontaminate and decontaminateBloom (shingle branch + anti-join side) —
+ * therefore read it ONCE themselves, through a `localCheckpoint` that every
+ * branch reads (lazy in all but decontamination: the first job fills it;
+ * eager there, see dropContaminatedRows); its blocks are released by the
+ * ContextCleaner when the result frame is garbage-collected. Callers need
+ * not persist their input. Only dedupIncrement still reads its batch twice:
+ * it checkpoints the batch's signatures but not the batch (ROADMAP item 4).
  */
 object Dedup {
 
@@ -96,9 +97,13 @@ object Dedup {
    * version ran them through the hash path, where the null md5 key grouped
    * (groupBy equates nulls) but never matched the equi-semi-join (join
    * EqualTo does not), silently DELETING every binary-only document.
+   *
+   * The input is read once: a lazy `localCheckpoint(false)` that the
+   * aggregate side, the semi-join side and the null-text union all read.
    */
   def exactRows(df: DataFrame, id: String, text: String): DataFrame = {
-    val hashed = df.where(col(text).isNotNull)
+    val in = df.localCheckpoint(false)
+    val hashed = in.where(col(text).isNotNull)
       .withColumn("_content_hash", xxhash64(col(text)))
       .withColumn("_content_md5", unhex(md5(col(text))))
     val keyed = hashed.select(col("_content_hash"), col("_content_md5"), col(id))
@@ -106,7 +111,7 @@ object Dedup {
       .agg(min(col(id)).as(id))
     hashed.join(keyed, Seq("_content_hash", "_content_md5", id), "left_semi")
       .drop("_content_hash", "_content_md5")
-      .unionByName(df.where(col(text).isNull))
+      .unionByName(in.where(col(text).isNull))
   }
 
   /**
@@ -122,11 +127,13 @@ object Dedup {
    * partitions before the shuffle (min_by over a struct is an order-free
    * aggregate — no window, so a pathological million-copy document cannot
    * funnel one task), and text rides only as payload on the kept side.
+   * Like exactRows, it reads its input once through one lazy checkpoint.
    */
   def exactRowsKeepBest(df: DataFrame, id: String, text: String,
                         better: Column): DataFrame = {
     // null-text rows bypass the hash path entirely (see exactRows)
-    val hashed = df.where(col(text).isNotNull)
+    val in = df.localCheckpoint(false)
+    val hashed = in.where(col(text).isNotNull)
       .withColumn("_content_hash", xxhash64(col(text)))
       .withColumn("_content_md5", unhex(md5(col(text))))
       .withColumn("_rank", better)
@@ -144,7 +151,7 @@ object Dedup {
           lit(Double.NegativeInfinity))), col(id))).as(id))
     hashed.join(keyed, Seq("_content_hash", "_content_md5", id), "left_semi")
       .drop("_content_hash", "_content_md5", "_rank")
-      .unionByName(df.where(col(text).isNull))
+      .unionByName(in.where(col(text).isNull))
   }
 
   /**

@@ -605,8 +605,10 @@ final class DocSet(val ds: Dataset[Document]) extends Serializable {
 
   /** Compute near-dup shingle sketch into `shingles`
     * (reference: transforms/sketcher.py:29; functions/simhash.py). */
-  def sketch(window: Int = 17, number: Int = 16): DocSet =
+  def sketch(window: Int = 17, number: Int = 16): DocSet = {
+    require(window >= 1 && number >= 1, s"window ($window) and number ($number) must be >= 1")
     map(d => d.copy(shingles = Some(graft.operators.Sketcher.shingles(d.text, window, number))))
+  }
 
   /** Drop near-duplicates via LSH banding over shingle sketches — the
     * scalable replacement for the reference's O(n^2) single-actor
@@ -628,14 +630,16 @@ final class DocSet(val ds: Dataset[Document]) extends Serializable {
     // distance <= threshold is estimate >= 1 - threshold. numHashes MUST
     // match sketch(number): a sketch of another length is not comparable
     // on this band layout, so it becomes a null signature and is KEPT.
-    // Lazily checkpointed: the keep-set reads sig from several branches,
-    // each of which would otherwise re-run the whole upstream pipeline.
-    val sig = ds.toDF().select(col("docId").as("_id"),
-        when(size(col("shingles")) === numHashes, col("shingles")).as("_sig"))
-      .localCheckpoint(false)
+    // The input is read once: a lazy checkpoint that the keep-set's first
+    // job fills and that the keep-set's branches and the semi-join side all
+    // read, as in Dedup.minhashLsh; otherwise each would re-run the whole
+    // upstream pipeline.
+    val in = ds.toDF().localCheckpoint(false)
+    val sig = in.select(col("docId").as("_id"),
+      when(size(col("shingles")) === numHashes, col("shingles")).as("_sig"))
     val keep = graft.dedup.Dedup.minhashLshKeepIds(sig, "docId", numHashes, bands,
       1.0 - threshold)
-    wrap(ds.toDF().join(keep, Seq("docId"), "left_semi").as[Document](docEnc))
+    wrap(in.join(keep, Seq("docId"), "left_semi").as[Document](docEnc))
   }
 
   /** Rerank by a similarity scorer then sort desc

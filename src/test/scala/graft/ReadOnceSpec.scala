@@ -5,16 +5,19 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.dedup.Dedup
+import graft.docset.DocSet
 import graft.functions.gf
+import graft.model.Document
 import graft.operators.{Packing, Sampling}
 
-/** The curation operators read their input once: each input row's upstream
-  * plan runs one time per operator call, however many internal branches or
-  * eager jobs the operator has. A tap UDF on an input column counts its
-  * evaluations in a LongAccumulator; the column is one the operator AND its
-  * output read, so column pruning cannot hide a second read. The input is
-  * parquet, not a local Seq: a projection over a LocalRelation is folded on
-  * the driver at optimisation time and would count plans, not reads. */
+/** The curation and dedup operators read their input once: each input
+  * row's upstream plan runs one time per operator call, however many
+  * internal branches or eager jobs the operator has. A tap UDF on an input
+  * column counts its evaluations in a LongAccumulator; the column is one the
+  * operator AND its output read, so column pruning cannot hide a second
+  * read. The input is parquet, not a local Seq: a projection over a
+  * LocalRelation is folded on the driver at optimisation time and would
+  * count plans, not reads. */
 class ReadOnceSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
 
@@ -60,12 +63,32 @@ class ReadOnceSpec extends AnyFunSuite {
     // the count aggregate reads only the stratum: tap that column
     ("temperatureMixture", "lang", Sampling.temperatureMixture(_, "doc_id", "lang",
       60L, 2, "s")),
-    ("packSequences", "text", Packing.packSequences(_, "doc_id", tokens, 64)))
+    ("packSequences", "text", Packing.packSequences(_, "doc_id", tokens, 64)),
+    ("exactRows", "text", Dedup.exactRows(_, "doc_id", "text")),
+    ("exactRowsKeepBest", "text", Dedup.exactRowsKeepBest(_, "doc_id", "text",
+      length(col("lang")))))
 
   for ((name, column, op) <- operators)
     test(s"$name evaluates each input row once") {
       assert(readsPerRow(column)(op) == 1.0)
     }
+
+  test("DocSet.sketchDedup evaluates each input row once") {
+    // a Document corpus in parquet; the tap sits on textRepresentation,
+    // upstream of the typed sketch() map
+    val p = java.nio.file.Files.createTempDirectory("read-once-docs").toString + "/docs"
+    val corpus = spark.read.parquet(dir).select(col("doc_id"), col("text")).collect()
+      .map(r => Document.of(r.getString(0), text = r.getString(1)))
+    DocSet.of(spark, corpus.toSeq).toDF.repartition(3).write.parquet(p)
+    val acc = spark.sparkContext.longAccumulator("tap-textRepresentation")
+    val tap = udf((s: String) => { acc.add(1L); s })
+    val docs = spark.read.parquet(p)
+      .withColumn("textRepresentation", tap(col("textRepresentation")))
+      .as[Document](DocSet.docEnc)
+    val out = DocSet.wrap(docs).sketch().sketchDedup().takeAll()
+    assert(out.nonEmpty && out.size < n, "no duplicate dropped: the tap proves nothing")
+    assert(acc.value.toDouble / n == 1.0)
+  }
 
   test("packSequences releases its input copy once the staged rows are stored") {
     val sc = spark.sparkContext
