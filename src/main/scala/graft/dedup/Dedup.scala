@@ -20,13 +20,13 @@ import graft.functions.gf
  * consume their input from more than one branch — minhashLsh and
  * DocSet.sketchDedup (keep-set + semi-join side), exactRows and
  * exactRowsKeepBest (aggregate side + semi-join side + null-text union),
- * decontaminate and decontaminateBloom (shingle branch + anti-join side) —
- * therefore read it ONCE themselves, through a `localCheckpoint` that every
- * branch reads (lazy in all but decontamination: the first job fills it;
- * eager there, see dropContaminatedRows); its blocks are released by the
- * ContextCleaner when the result frame is garbage-collected. Callers need
- * not persist their input. Only dedupIncrement still reads its batch twice:
- * it checkpoints the batch's signatures but not the batch (ROADMAP item 4).
+ * decontaminate and decontaminateBloom (shingle branch + anti-join side),
+ * dedupIncrement (history joins + keep-set + semi-join side) — therefore
+ * read it ONCE themselves, through a `localCheckpoint` that every branch
+ * reads (lazy in most: the first job fills it; eager in decontamination,
+ * see dropContaminatedRows, and in dedupIncrement); its blocks are released
+ * by the ContextCleaner when the result frame is garbage-collected. Callers
+ * need not persist their input.
  */
 object Dedup {
 
@@ -234,16 +234,31 @@ object Dedup {
    *     history (anti-join on the key — text never shuffles as a key);
    *  2. near drops: batch rows whose minhash signature shares an LSH band
    *     with ANY history signature at est-jaccard ≥ threshold (history
-   *     always wins — no id ordering against history). Joins DISTINCT
-   *     signatures band-to-band, so exact-duplicate classes collapse
-   *     before the quadratic stage on both sides;
+   *     always wins — no id ordering against history);
    *  3. within-batch: `minhashLsh`'s greedy min-id rule over the
    *     HISTORY-SURVIVORS (a batch row removed by history does not drop
    *     other batch rows — the documented order).
+   * Rules 1 and 2 apply per ROW: a batch row that history drops stays
+   * dropped even when another surviving batch row shares its id. Rule 3
+   * keeps ids, as `minhashLsh` does.
    *
-   * Shuffle volume: |batch| on the exact key, |distinct sigs| × bands on
-   * the band key — both independent of history TEXT size; history rides
-   * only as fingerprints.
+   * What is read, shuffled and broadcast:
+   *  - the batch is read, hashed and sketched once, by one eager
+   *    `localCheckpoint` job that every branch then reads; eager, because
+   *    with a lazy checkpoint AQE's concurrent first stages all run its
+   *    lineage and their tasks report metrics the driver has already
+   *    dropped ("Failed to update accumulator" errors). The batch keeps
+   *    its input partitioning: a rebalance before the sketch costs one
+   *    more shuffle and measured no faster on 40-row appends;
+   *  - history enters as two plain projections, its content keys and its
+   *    signatures exploded to band keys, with no aggregate: the anti-join
+   *    and the band join tolerate duplicate keys. Each is the build side
+   *    of its join, broadcast while under
+   *    `spark.sql.autoBroadcastJoinThreshold`; above it the planner's
+   *    sort-merge join would shuffle it (a fingerprint store partitioned
+   *    by band key is the scale path, not built yet);
+   *  - every shuffle carries batch rows or batch signatures only: the
+   *    within-batch keep-set and the per-row cut.
    */
   def dedupIncrement(batch: DataFrame, id: String, text: String,
                      history: DataFrame,
@@ -252,36 +267,22 @@ object Dedup {
                      signature: Option[Column => Column] = None): DataFrame = {
     val sigFn = signature.getOrElse((t: Column) =>
       gf.minhashSignature(gf.wordShingles(t, shingleSize), numHashes))
-    val hashed = batch
+    val in = batch
       .withColumn("_ch", xxhash64(col(text)))
       .withColumn("_cm", unhex(md5(col(text))))
-    val exactSurv = hashed.join(
-        history.select(col("content_hash").as("_ch"), col("content_md5").as("_cm"))
-          .dropDuplicates("_ch", "_cm"),
-        Seq("_ch", "_cm"), "left_anti")
-      .drop("_ch", "_cm")
-    // lazy checkpoint: bsig feeds the history-band join AND the final
-    // within-batch pass — the sketch (the dominant per-row cost) must run
-    // once, not once per consumer
-    val bsig = rebalance(exactSurv.select(col(id).as("_id"), col(text).as("_t")))
-      .select(col("_id"), sigFn(col("_t")).as("_sig"))
-      .localCheckpoint(false)
-    val bGroups = bsig.groupBy(col("_sig")).agg(collect_list(col("_id")).as("_ids"))
-    val bBands = bGroups.select(col("_sig"), col("_ids"),
-      bandKeys(col("_sig"), numHashes, bands))
-    val hBands = history.select(col("sig")).dropDuplicates("sig")
-      .select(col("sig"), bandKeys(col("sig"), numHashes, bands))
-    val dropSigs = bBands.join(hBands, Seq("_band"))
+      .withColumn("_sig", sigFn(col(text)))
+      .localCheckpoint()
+    val exactSurv = in.join(
+      history.select(col("content_hash").as("_ch"), col("content_md5").as("_cm")),
+      Seq("_ch", "_cm"), "left_anti")
+    val dropSigs = exactSurv.select(col("_sig"), bandKeys(col("_sig"), numHashes, bands))
+      .join(history.select(col("sig"), bandKeys(col("sig"), numHashes, bands)), Seq("_band"))
       .where(slotMatch(col("_sig"), col("sig"), numHashes) >= threshold)
-      .select(col("_sig")).dropDuplicates("_sig")
-    val survIds = bGroups.join(dropSigs, Seq("_sig"), "left_anti")
-      .select(explode(col("_ids")).as(id))
-    val surv1 = exactSurv.join(survIds, Seq(id), "left_semi")
-    // within-batch greedy pass over the ALREADY-COMPUTED signatures of the
-    // history survivors (calling minhashLsh here would re-sketch the batch)
-    val survSig = bsig.join(survIds.withColumnRenamed(id, "_id"), Seq("_id"), "left_semi")
-    surv1.join(minhashLshKeepIds(survSig, id, numHashes, bands, threshold),
-      Seq(id), "left_semi")
+      .select(col("_sig"))
+    val surv = exactSurv.join(dropSigs, Seq("_sig"), "left_anti")
+    surv.join(minhashLshKeepIds(surv.select(col(id).as("_id"), col("_sig")), id,
+        numHashes, bands, threshold), Seq(id), "left_semi")
+      .drop("_ch", "_cm", "_sig")
   }
 
   /**

@@ -303,6 +303,84 @@ class DedupAnnSpec extends AnyFunSuite {
     }
   }
 
+  /** 200 seeded words: a one-word edit keeps est-jaccard far above 0.5 and
+    * shares a band with near certainty; two seeds share nothing. */
+  private def longDoc(seed: Int): String = {
+    val r = new scala.util.Random(seed)
+    Seq.fill(200)(s"w${r.nextInt(5000)}").mkString(" ")
+  }
+  private def nearOf(t: String): String = {
+    val w = t.split(" ")
+    w(w.length / 2) = "edited"
+    w.mkString(" ")
+  }
+
+  test("dedupIncrement on a mixed batch: history drops, within-batch greedy, null text kept") {
+    val hist = (0 until 4).map(i => (100L + i, longDoc(i))).toDF("doc_id", "text")
+    val batch = Seq[(Long, Option[String])](
+      (1L, Some(longDoc(50))), (2L, Some(longDoc(51))),      // new
+      (3L, Some(longDoc(0))), (4L, Some(longDoc(1))),        // exact copies of history
+      (5L, Some(nearOf(longDoc(2)))), (6L, Some(nearOf(longDoc(3)))), // near copies of history
+      (7L, Some(longDoc(60))), (8L, Some(nearOf(longDoc(60)))),       // within-batch near pair
+      (9L, Some(longDoc(61))), (10L, Some(longDoc(61))),     // exact duplicate inside the batch
+      (11L, None))                                           // null text
+      .toDF("doc_id", "text")
+    val out = Dedup.dedupIncrement(batch, "doc_id", "text",
+        Dedup.fingerprints(hist, "doc_id", "text"))
+    assert(out.columns.toSeq == Seq("doc_id", "text"))
+    assert(out.select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 7L, 9L, 11L))
+  }
+
+  test("dedupIncrement drops per row: a near copy of history goes, a fresh row with its id stays") {
+    val hist = Seq((100L, longDoc(7))).toDF("doc_id", "text")
+    val batch = Seq((5L, nearOf(longDoc(7))), (5L, longDoc(70))).toDF("doc_id", "text")
+    val out = Dedup.dedupIncrement(batch, "doc_id", "text",
+        Dedup.fingerprints(hist, "doc_id", "text"))
+      .as[(Long, String)].collect().toSeq
+    assert(out == Seq((5L, longDoc(70))))
+  }
+
+  test("dedupIncrement never shuffles or aggregates history rows") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val histDir = java.nio.file.Files.createTempDirectory("inc-history").toString + "/fp"
+    Dedup.fingerprints((0 until 8).map(i => (100L + i, longDoc(i))).toDF("doc_id", "text"),
+      "doc_id", "text").write.parquet(histDir)
+    val batch = Seq((1L, longDoc(0)), (2L, nearOf(longDoc(1))), (3L, longDoc(80)),
+      (4L, nearOf(longDoc(80)))).toDF("doc_id", "text")
+    val out = Dedup.dedupIncrement(batch, "doc_id", "text", spark.read.parquet(histDir))
+    assert(out.select("doc_id").as[Long].collect().toSet == Set(3L))
+    // the AQE final plan, walked into its query stages and reused exchanges
+    def inner(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case o => o.children
+    }
+    def all(p: SparkPlan): Seq[SparkPlan] = p +: inner(p).flatMap(all)
+    def isHistory(p: SparkPlan) = p match {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.toString.contains(histDir))
+      case _ => false
+    }
+    // history rows flow into `p` when a history scan is reached without
+    // crossing a join: past a join only matched batch-side rows flow on
+    def carriesHistory(p: SparkPlan): Boolean = p match {
+      case _: BaseJoinExec => false
+      case s if isHistory(s) => true
+      case o => inner(o).exists(carriesHistory)
+    }
+    val plan = all(out.queryExecution.executedPlan)
+    assert(plan.exists(isHistory), "no history scan in the plan: the check proves nothing")
+    val offenders = plan.collect {
+      case e: ShuffleExchangeExec if carriesHistory(e.child) => e
+      case a: BaseAggregateExec if carriesHistory(a.child) => a
+    }
+    assert(offenders.isEmpty, offenders.map(_.simpleString(200)).mkString("\n"))
+  }
+
   test("bm25 ranks term-bearing docs above term-free docs, tf-monotone") {
     val docs = Seq(
       (0L, "spark spark spark engine"),

@@ -90,6 +90,14 @@ class ReadOnceSpec extends AnyFunSuite {
     assert(acc.value.toDouble / n == 1.0)
   }
 
+  test("dedupIncrement evaluates each batch row once") {
+    // the whole corpus is the batch; history is a slice of it
+    val history = Dedup.fingerprints(spark.read.parquet(dir).where(col("doc_id") < "d0030"),
+      "doc_id", "text", shingleSize = 3)
+    assert(readsPerRow("text")(Dedup.dedupIncrement(_, "doc_id", "text", history,
+      shingleSize = 3)) == 1.0)
+  }
+
   test("packSequences releases its input copy once the staged rows are stored") {
     val sc = spark.sparkContext
     val (in, _) = tapped("text")
