@@ -1,7 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Per-round benchmark main. Prints ONE JSON line for the driver.
+import scala.util.control.NonFatal
+
+/** Gate benchmark: times every gate, or the gates named in the optional
+  * comma-separated first argument, and prints two JSON lines (see below).
+  *
+  * usage: runMain graft.Bench [q_a,q_b]
+  * env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCH_RUNS (timed passes, default 3)
   *
   * Each query is forced to FULL evaluation via `queryExecution.toRdd.count()`:
   * executing the query's own physical plan materializes every output column.
@@ -12,87 +17,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // ROUND-9 MEASUREMENT FIX: the 115-query surface generates ~400+
-      // distinct codegen'd classes per pass, but the generated-class cache
-      // (static conf, default 100 entries) evicts LRU — so by the time a
-      // pass wraps around, EVERY query recompiles its generated code on
-      // EVERY run, and the janino-fresh classes never get C2-JIT-warm.
-      // That is exactly the r8 signature: run_totals [145.8, 95.3, 74.7]
-      // still falling at run 3, with the regression charged to whichever
-      // queries run first. One pass's worth of classes must fit.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: JVM/codegen/parquet-footer startup otherwise lands on
-    // whichever query happens to run first (~3s of JIT, not operator cost).
-    // Exercises the kernels the timed queries share — window, hash agg with
-    // decimal/cents math, regex + split over strings, array fold — so the
-    // first alphabetical queries don't absorb the interpreter-to-JIT ramp.
-    try {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      spark.read.parquet(s"$sfDir/region.parquet")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("r_regionkey")).orderBy(col("r_name"))))
-        .groupBy(col("rn")).agg(count(lit(1)))
-        .queryExecution.toRdd.count()
-      spark.read.parquet(s"$sfDir/orders.parquet")
-        .groupBy(col("o_orderstatus"))
-        .agg(sum(round(col("o_totalprice") * 100).cast("long")), count(lit(1)))
-        .queryExecution.toRdd.count()
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(size(split(trim(lower(regexp_replace(col("text"), "a", "b"))), "\\s+")).as("n"))
-        .agg(sum(col("n")))
-        .queryExecution.toRdd.count()
-      spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(aggregate(zip_with(col("embedding"), col("embedding"),
-          (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (a, v) => a + v))
-        .queryExecution.toRdd.count()
-      // the typed Document encoder + DocSet map path: its serializer /
-      // deserializer JIT otherwise lands on the first q_docset_* / DocSet
-      // query (~5s of one-time cost measured at sf0.1)
-      graft.sources.DocRead.fromDataFrame(
-          spark.read.parquet(s"$sfDir/region.parquet"), Some("r_regionkey"))
-        .map(d => d.withProp("w", d.properties.size.toString))
-        .toDF.queryExecution.toRdd.count()
-      // agg -> join-of-aggregates -> window shape (the tfidf/plan-family
-      // codegen unit): tiny input, compiles the same generated classes
-      val rtoks = spark.read.parquet(s"$sfDir/region.parquet")
-        .select(col("r_regionkey").as("k"), explode(split(lower(col("r_name")), "")).as("t"))
-      val rtf = rtoks.groupBy(col("k"), col("t")).agg(count(lit(1)).as("tf"))
-      val rdf = rtf.groupBy(col("t")).agg(count(lit(1)).as("df"))
-      rtf.join(rdf, "t")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("k")).orderBy(desc("tf"), col("t"))))
-        .where(col("rn") <= 2)
-        .queryExecution.toRdd.count()
-      // plan-layer class loading (LlmPlanner JSON parse, QueryExecutor
-      // lowering): ~1.2s of one-time cost that otherwise lands on the
-      // first q_nlq_* query — measured, the steady-state construct cost
-      // is ~0.2s of fixed fake-LLM round trips, never per-row work
-      val canned = """{"query":"q","result_node":1,"nodes":{
-        "0":{"node_type":"QueryDatabase","node_id":0,"inputs":[],"index":"region"},
-        "1":{"node_type":"Count","node_id":1,"inputs":[0]}}}"""
-      val planner = new graft.plan.LlmPlanner(
-        new graft.llm.CannedLlmClient(canned),
-        schema = Map("region" -> Seq("r_regionkey", "r_name")),
-        processors = Seq(graft.plan.DefaultPlanValidator))
-      new graft.plan.QueryExecutor(spark, new graft.llm.FakeLlmClient("echo:8"),
-          name => spark.read.parquet(s"$sfDir/$name.parquet"))
-        .execute(planner.plan("how many regions")) match {
-        case graft.plan.QNumV(v) => require(v >= 0)
-        case _ => ()
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
-      // NonFatal only: an OOM/VM error here must propagate — a degraded JVM
-      // would silently skew every timed run (ADVICE r9)
-      System.err.println(s"[bench] warmup: ${e.getMessage}")
-    }
+    val names = GateHarness.select(args.headOption)
+    val spark = GateHarness.session()
     val failures = scala.collection.mutable.ListBuffer[String]()
     // median of BENCH_RUNS full passes (default 3): single-shot numbers
     // carried ±25% run-to-run variance between recorded artifacts (round-5
@@ -100,39 +26,21 @@ object Bench {
     // cross-round comparisons read as real changes. The reported value is
     // the sum of per-query MEDIANS; per-run totals ride along so the
     // artifact itself shows the spread.
-    val runs = math.max(1, envInt("BENCH_RUNS", 3))
-    // name order, not Map hash order: adding a query must not reshuffle the
-    // execution order of the others (JIT/GC state varies by position, which
-    // otherwise shows up as cross-round noise on unchanged queries)
-    // BENCH_ONLY=q_a,q_b — iteration aid: time just the named queries.
-    // Never set by the driver, so the recorded artifacts stay full-surface.
-    val names = sys.env.get("BENCH_ONLY") match {
-      case Some(only) =>
-        val keep = only.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        // a typo'd name must not yield a silently-partial run that still
-        // reports success (ADVICE r8)
-        val unknown = keep -- SparkEntry.queries.keySet
-        require(unknown.isEmpty,
-          s"BENCH_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
-        SparkEntry.queries.keys.toSeq.filter(keep).sorted
-      case None => SparkEntry.queries.keys.toSeq.sorted
-    }
-    // one FULL untimed warmup pass (r9): the kernel warmup above covers the
-    // shared runtime, but each query's own generated classes still compile
-    // on first execution. With the codegen cache sized to hold a whole
-    // pass, a single untimed sweep makes every timed run hit warm classes —
-    // the r8 artifact showed the ramp persisting into run 2 (medians of 3
-    // then charge half the ramp to the recorded number). BENCH_WARMUP=0
-    // restores the old protocol for A/B-ing the measurement itself.
-    val warmupPasses = envInt("BENCH_WARMUP", 1)
-    (1 to warmupPasses).foreach { _ =>
-      names.foreach { name =>
-        try SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] warmup $name: ${e.getMessage}")
-        }
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    val runs = math.max(1, GateHarness.envInt("BENCH_RUNS", 3))
+    // one FULL untimed warmup pass (r9): JVM, codegen and parquet-footer
+    // start-up would otherwise land on whichever query runs first, and each
+    // query's own generated classes compile on first execution. With the
+    // codegen cache sized to hold a whole pass, a single untimed sweep makes
+    // every timed run hit warm classes — the r8 artifact showed the ramp
+    // persisting into run 2 (medians of 3 then charge half the ramp to the
+    // recorded number).
+    val warmupPasses = 1
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] warmup $name: ${e.getMessage}")
       }
+      GateHarness.sweep(spark)
     }
     // HEAVY-TAIL VARIANCE DIAGNOSIS (round 7): localCheckpoint blocks from
     // one query (dedup CC, pagerank, rrf, tfidf, packing, triangles all
@@ -143,12 +51,10 @@ object Bench {
     // That matched the observed signature exactly: the swinging queries
     // (q_dup_spans, q_pack_sequences, q_ngram_jaccard) sit alphabetically
     // AFTER the checkpoint-heavy dedup family, while light queries held
-    // steady. Mitigation: deterministically unpersist every persistent RDD
-    // after each query (all queries fully evaluate before the next starts,
-    // so nothing can need the blocks again). Evidence rides in the
-    // artifact: per-run peak storage bytes with cleanup on, and the count
-    // of RDDs evicted — at sf0.1 eviction counts in the hundreds confirm
-    // checkpoints were accumulating before.
+    // steady. Mitigation: the storage sweep after each query. Evidence rides
+    // in the artifact: per-run peak storage bytes with cleanup on, and the
+    // count of RDDs evicted — at sf0.1 eviction counts in the hundreds
+    // confirm checkpoints were accumulating before.
     val storagePeaks = scala.collection.mutable.ArrayBuffer[Long]()
     val evictions = scala.collection.mutable.ArrayBuffer[Int]()
     val samples: Seq[Seq[(String, Double)]] = (1 to runs).map { _ =>
@@ -156,8 +62,10 @@ object Bench {
       var evicted = 0
       val run = names.map { name =>
         val t0 = System.nanoTime()
+        // NonFatal only: an OOM or VM error must end the run, since a
+        // degraded JVM would skew every later timing (ADVICE r9)
         try SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           // failed queries are recorded in the JSON line too — a fast
           // failure must not be mistaken for a fast success
           if (!failures.contains(name)) failures += name
@@ -165,9 +73,7 @@ object Bench {
         }
         val dt = (System.nanoTime() - t0) / 1e9
         peak = math.max(peak, spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum)
-        val persisted = spark.sparkContext.getPersistentRDDs
-        evicted += persisted.size
-        persisted.values.foreach(_.unpersist(blocking = false))
+        evicted += GateHarness.sweep(spark)
         name -> dt
       }
       storagePeaks += peak
@@ -186,207 +92,25 @@ object Bench {
     val runTotals = samples.map(_.map(_._2).sum)
       .map(t => f"$t%.1f").mkString("[", ",", "]")
     val fails = failures.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val (prev, prevWarmup) = prevJson(results.map(_._1).toSet)
     val storageMb = storagePeaks.map(b => f"${b / 1048576.0}%.0f").mkString("[", ",", "]")
     val evictedJson = evictions.mkString("[", ",", "]")
-    // MEASUREMENT-CONTRACT FIX (r22, VERDICT r21 "What's wrong #1"): the
-    // driver keeps only a 2000-char stdout TAIL, and this line is ~16 KB —
-    // every BENCH_r*.json since r18 recorded parsed=null, and with "prev"
-    // trailing the line the surviving tail was LAST round's numbers
-    // impersonating the live run. Two changes, both output-only:
-    //   (a) the full line now ends with the LIVE "queries" map (prev moved
-    //       before it), so whatever survives the clip is this run's data;
-    //   (b) a second, compact line (<1500 chars, no per-query maps) is
-    //       printed LAST so the driver's tail always contains one complete
-    //       parseable JSON object. The full per-query map is in the big
-    //       line and in bench_out.json (same content, written below).
-    // Same protocol, same timed action, same queries — nothing about the
-    // measurement itself changed.
+    // Two lines, because a reader that keeps only a ~2000-char stdout tail
+    // clips the full line (~16 KB): the full line ends with the per-query
+    // "queries" map, and the compact line (<1500 chars, no per-query map)
+    // comes LAST, so such a tail always holds one complete JSON object. The
+    // full line is also written to bench_out.json.
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","failures":$fails,"runs":$runs,"aggregate":"median","warmup_passes":$warmupPasses,"run_totals":$runTotals,"storage_peak_mb":$storageMb,"rdds_evicted":$evictedJson,"variance_note":"r9: codegen cache sized to hold a full pass + one full untimed warmup pass; r7 heavy-tail unpersist retained; run 1 can still ride residual C2-JIT/page-cache ramp (r15 saw 1.6x) - the median of 3 absorbs it by construction","prev":$prev,"prev_warmup_passes":$prevWarmup,"sf":"$sfDir","queries":$qs}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failures":$fails,"runs":$runs,"aggregate":"median","warmup_passes":$warmupPasses,"run_totals":$runTotals,"storage_peak_mb":$storageMb,"rdds_evicted":$evictedJson,"variance_note":"r9: codegen cache sized to hold a full pass + one full untimed warmup pass; r7 heavy-tail unpersist retained; run 1 can still ride residual C2-JIT/page-cache ramp (r15 saw 1.6x) - the median of 3 absorbs it by construction","sf":"$sfDir","queries":$qs}"""
     println(line)
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","failures":$fails,"runs":$runs,"aggregate":"median","warmup_passes":$warmupPasses,"run_totals":$runTotals,"cpus":"$cpus","n_queries":${results.size},"queries_full":"bench_out.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failures":$fails,"runs":$runs,"aggregate":"median","warmup_passes":$warmupPasses,"run_totals":$runTotals,"cpus":"${GateHarness.envCpus}","n_queries":${results.size},"queries_full":"bench_out.json","sf":"$sfDir"}"""
     println(compact)
-    // the driver's stdout capture tail-clips long lines (BENCH_r2/r3 both
-    // recorded truncated JSON) — persist the full line as a repo artifact too
     try {
       val w = new java.io.PrintWriter("bench_out.json", "UTF-8")
       try w.println(line) finally w.close()
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] bench_out.json write failed: ${e.getMessage}")
     }
     spark.stop()
   }
-
-  /** Env int with a contextual error (a bare .toInt crash names neither the
-    * variable nor the value — ADVICE r9). */
-  private def envInt(name: String, default: Int): Int =
-    sys.env.get(name).map { v =>
-      require(v.trim.matches("-?\\d+"), s"$name must be an integer, got '$v'")
-      v.trim.toInt
-    }.getOrElse(default)
-
-  /** Per-query times from the latest BENCH_r*.json in the working directory,
-    * so each round's JSON carries its own like-for-like comparison basis.
-    * Returns (queriesJson, warmupPassesOfThatRound) — the protocol tag lets
-    * readers tell a measurement-protocol change from a query-level speedup
-    * (ADVICE r9): rounds ≤8 ran with 0 warmup passes, r9+ with 1. */
-  private def prevJson(names: Set[String]): (String, String) = try {
-    val dir = new java.io.File(".")
-    val benches = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-      // numeric round order — lexical would put r10 before r9
-      .sortBy(f => f.getName.stripPrefix("BENCH_r").stripSuffix(".json").toInt)
-    benches.lastOption match {
-      case None => ("{}", "null")
-      case Some(f) =>
-        // prefer the committed full-line archive of that round
-        // (BENCH_FULL_rN.json — the builder's clean same-code run), which
-        // never suffers the driver tail capture's line clipping
-        val n = f.getName.stripPrefix("BENCH_r").stripSuffix(".json")
-        val fullArchive = new java.io.File(f"BENCH_FULL_r$n%s.json")
-        val src = scala.io.Source.fromFile(
-          if (fullArchive.isFile) fullArchive else f)
-        val text = try src.mkString finally src.close()
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods.parse
-        val root = parse(text)
-        // two shapes: our own emitted line (queries at top level), or the
-        // driver's wrapper where the line is embedded in a "tail" log string
-        val queries = root \ "queries" match {
-          case o: JObject => o
-          case _ => root \ "tail" match {
-            case JString(t) =>
-              val i = t.lastIndexOf("{\"metric\"")
-              val line =
-                if (i < 0) ""
-                else t.indexOf('\n', i) match {
-                  case -1 => t.substring(i)
-                  case j  => t.substring(i, j)
-                }
-              // r22+: the LAST {"metric" line in a tail is the compact
-              // summary (no per-query map) — a successful parse of it must
-              // still fall through to regex recovery over the big line
-              val fromLine =
-                if (line.isEmpty) JObject(Nil)
-                else parse(line) \ "queries" match {
-                  case o: JObject => o
-                  case _ => JObject(Nil)
-                }
-              if (fromLine.obj.nonEmpty) fromLine
-              else {
-                // the driver's capture byte-clips long lines from the FRONT
-                // (BENCH_r06 lost the {"metric" prefix entirely) — recover
-                // per-query pairs by regex. Formats:
-                //  - r22+ big line ends with the LIVE "queries" map: match
-                //    only after the last "queries": marker (pairs before it
-                //    are the embedded prev map).
-                //  - pre-r22 line had queries first, prev last: match only
-                //    BEFORE "prev": — its keys are the same q_* names
-                //    carrying the round-BEFORE-last's values, and a query
-                //    whose current entry was clipped away must stay absent
-                //    rather than silently inherit a two-rounds-stale one.
-                val qMark = t.lastIndexOf("\"queries\":")
-                val region =
-                  if (qMark >= 0) t.substring(qMark)
-                  else t.substring(0, t.indexOf("\"prev\":") match {
-                    case -1 => t.length
-                    case p  => p
-                  })
-                val pair = "\"(q_[A-Za-z0-9_]+)\":([0-9][0-9.eE+-]*)".r
-                val seen = scala.collection.mutable.LinkedHashMap[String, Double]()
-                pair.findAllMatchIn(region).foreach { m =>
-                  if (!seen.contains(m.group(1)))
-                    try seen(m.group(1)) = m.group(2).toDouble
-                    catch { case _: NumberFormatException => }
-                }
-                JObject(seen.toList.map { case (k, v) => k -> (JDouble(v): JValue) })
-              }
-            case _ => JObject(Nil)
-          }
-        }
-        // the driver's tail capture clips long lines, so the recovered map
-        // can be the alphabetical TAIL only (r15 carried 54 of 196 — ADVICE
-        // r15). The committed bench_out.json holds the same run's FULL
-        // line: when its per-query values agree exactly with every
-        // recovered pair (same run => same printed doubles), prefer it.
-        val recovered = queries.obj.collect {
-          case (k, JDouble(v)) => k -> v
-          case (k, JInt(v))    => k -> v.toDouble
-        }.toMap
-        // same-run witness beyond the per-query pairs: the run_totals
-        // array survives even a tail whose clip ate every q_ pair (r15's
-        // did — recovery found zero and prev shipped empty)
-        def runTotalsOf(j: JValue): Option[String] = j \ "run_totals" match {
-          case JArray(xs) => Some(xs.map {
-            case JDouble(v) => v.toString
-            case JInt(v)    => v.toString
-            case other      => other.toString
-          }.mkString(","))
-          case _ => root \ "tail" match {
-            case JString(t) => "run_totals\"\\s*:\\s*\\[([0-9.,\\s]*)\\]".r
-              .findFirstMatchIn(t).map(_.group(1).replaceAll("\\s", ""))
-            case _ => None
-          }
-        }
-        val full: Map[String, Double] =
-          (try {
-            val src = scala.io.Source.fromFile("bench_out.json")
-            val txt = try src.mkString finally src.close()
-            val bo = parse(txt)
-            bo \ "queries" match {
-              case o: JObject =>
-                val m = o.obj.collect {
-                  case (k, JDouble(v)) => k -> v
-                  case (k, JInt(v))    => k -> v.toDouble
-                }.toMap
-                val pairsAgree = recovered.nonEmpty && m.size > recovered.size &&
-                  recovered.forall { case (k, v) => m.get(k).contains(v) }
-                val totalsAgree = (runTotalsOf(root), runTotalsOf(bo)) match {
-                  case (Some(a), Some(b)) =>
-                    // formatting differs (%.1f vs raw): compare numerically
-                    val pa = a.split(",").filter(_.nonEmpty).map(_.toDouble)
-                    val pb = b.split(",").filter(_.nonEmpty).map(_.toDouble)
-                    pa.length == pb.length && pa.nonEmpty &&
-                      pa.zip(pb).forall { case (x, y) => math.abs(x - y) < 0.06 }
-                  case _ => false
-                }
-                if (pairsAgree || (recovered.isEmpty && totalsAgree)) Some(m)
-                else None
-              case _ => None
-            }
-          } catch { case _: Throwable => None }).getOrElse(recovered)
-        val qJson = full.toSeq.sortBy(_._1).collect {
-          case (k, v) if names(k) => s"\"" + k + "\":" + v
-        }.mkString("{", ",", "}")
-        // protocol of the prev artifact: top-level field, else regex over the
-        // driver's tail wrapper (lax prefix — the front-clip can bite into
-        // the key itself: BENCH_r09's tail starts at `mup_passes":1`), else
-        // the committed bench_out.json (the same run's full line, not yet
-        // overwritten at this point); absent everywhere => pre-r9 => 0
-        val warmup = root \ "warmup_passes" match {
-          case JInt(n)    => n.toString
-          case JDouble(n) => n.toInt.toString
-          case _ =>
-            val fromTail = root \ "tail" match {
-              case JString(t) => "up_passes\"\\s*:\\s*(\\d+)".r
-                .findFirstMatchIn(t).map(_.group(1))
-              case _ => None
-            }
-            fromTail.orElse {
-              try {
-                val src = scala.io.Source.fromFile("bench_out.json")
-                val txt = try src.mkString finally src.close()
-                parse(txt) \ "warmup_passes" match {
-                  case JInt(n)    => Some(n.toString)
-                  case JDouble(n) => Some(n.toInt.toString)
-                  case _          => None
-                }
-              } catch { case _: Throwable => None }
-            }.getOrElse("0")
-        }
-        (qJson, warmup)
-    }
-  } catch { case _: Throwable => ("{}", "null") }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dump `.explain("formatted")` for every declared query (or a named
   * subset) to a directory — the optimization-round audit tool: the judge
@@ -12,31 +12,17 @@ import org.apache.spark.sql.SparkSession
   * real jobs. Per-query failures are counted and the process exits nonzero
   * when any plan is missing, so an audit run cannot silently lose files.
   *
-  * usage: runMain graft.PlanDump <outDir> [q_a,q_b,...]
+  * usage: runMain graft.PlanDump <outDir> [q_a,q_b]
   * env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same contract as Bench)
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse(sys.error("usage: PlanDump <outDir> [names]"))
+    val outDir = args.headOption.getOrElse(sys.error("usage: PlanDump <outDir> [q_a,q_b]"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val suffix = sys.env.getOrElse("PLAN_SUFFIX", "")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = GateHarness.select(args.lift(1))
+    val spark = GateHarness.session()
     val dir = new java.io.File(outDir)
     dir.mkdirs()
-    val names = args.lift(1) match {
-      case Some(only) =>
-        val keep = only.split(",").map(_.trim).filter(_.nonEmpty).toSet
-        val unknown = keep -- SparkEntry.queries.keySet
-        require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-        SparkEntry.queries.keys.toSeq.filter(keep).sorted
-      case None => SparkEntry.queries.keys.toSeq.sorted
-    }
     var failed = 0
     names.foreach { name =>
       try {
@@ -44,14 +30,14 @@ object PlanDump {
         // queryExecution.explainString gives the same text explain() prints
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        val w = new java.io.PrintWriter(new java.io.File(dir, s"$name$suffix.txt"), "UTF-8")
+        val w = new java.io.PrintWriter(new java.io.File(dir, s"$name.txt"), "UTF-8")
         try w.println(txt) finally w.close()
         println(s"[plandump] $name ok")
-      } catch { case scala.util.control.NonFatal(e) =>
+      } catch { case NonFatal(e) =>
         failed += 1
         println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GateHarness.sweep(spark)
     }
     println(s"[plandump] done: ${names.size - failed}/${names.size} ok, $failed failed")
     spark.stop()

@@ -1,15 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Flagship smoke: runs SparkEntry.entry and prints its row count
   * (the driver checks rows > 0). */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GateHarness.session()
     val df = SparkEntry.entry(spark).cache()
     val rows = df.count()
     println(s"entry rows=$rows")

@@ -1,47 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+/** Correctness dump: each gate's result → parquet, plus oracle_sql.json,
+  * for a DuckDB compare (`tools/check_oracle.py`). With the optional
+  * comma-separated gate list, only those gates are dumped and only their
+  * oracles are written, so `tools/check_oracle.py` checks just them.
+  *
+  * usage: runMain graft.Verify <sfDir> <outDir> [q_a,q_b]
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    val verbose = sys.env.contains("VERIFY_VERBOSE")
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (verbose) System.err.println(s"[verify] running $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // deterministic storage sweep between queries (the Bench r7 fix):
-      // each query fully materializes into its parquet before the next
-      // starts, so nothing can need the blocks again — without this,
-      // operator persists/checkpoints from 219 queries accumulate until
-      // driver GC and compete with later queries' execution memory
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    require(args.length == 2 || args.length == 3, "usage: Verify <sfDir> <outDir> [q_a,q_b]")
+    val Array(sfDir, outDir) = args.take(2)
+    val names = GateHarness.select(args.lift(2))
+    val spark = GateHarness.session()
+    dump(spark, sfDir, outDir, names)
     // corpus-derived oracles (e.g. the BPE merge table as SQL literals);
     // never let a dynamic-oracle failure sink the static gate — the worst
     // case is the affected query degrading to the driver's rows-only check
@@ -50,9 +27,33 @@ object Verify {
         System.err.println(s"[verify] dynamic oracles failed: ${e.getMessage}")
         Map.empty[String, String]
       }
-    val json = (SparkEntry.oracleSql ++ dynamic)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // a full run writes every declared oracle, so one whose gate wrote no
+    // output (renamed gate, mistyped key) fails check_oracle.py
+    val all = SparkEntry.oracleSql ++ dynamic
+    val oracles = args.lift(2).fold(all)(_ => all.filter { case (k, _) => names.contains(k) })
+    val json = oracles.map { case (k, v) => s"${GateHarness.jsonString(k)}: ${GateHarness.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Writes each gate of `names` to `<outDir>/<name>` as parquet. The old
+    * output of every gate is deleted first, so `outDir` ends up holding just
+    * this run's gates, and a gate that fails (logged; the run goes on)
+    * leaves no stale parquet for `tools/check_oracle.py` to pass. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String, names: Seq[String]): Unit = {
+    val out = new Path(outDir)
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SparkEntry.queries.keys.foreach(name => fs.delete(new Path(out, name), true))
+    fs.mkdirs(out)
+    names.foreach { name =>
+      System.err.println(s"[verify] running $name")
+      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      }
+      GateHarness.sweep(spark)
+    }
   }
 }

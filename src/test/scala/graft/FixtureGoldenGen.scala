@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.model.Document
 import graft.operators._
 import graft.sources.DocRead
@@ -83,12 +82,7 @@ object FixtureGoldenGen {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GateHarness.session(cpus = 4)
 
     def corpus(sub: String, ext: String, p: => Partitioner): Seq[(Document, Partitioner)] =
       DocRead.binary(spark, s"$DataDir/$sub", ext)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Memory-pressure probe (round 20, SURVEY §6): the 128 GiB sandbox never
@@ -34,12 +34,8 @@ object MemoryProbe {
     // floor (concurrent spill-reader read-ahead buffers alone OOM it);
     // 2g/8 slots = 256 MB/slot is the realistic worst case to pin.
     val threads = sys.env.getOrElse("MEM_THREADS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GateHarness.session(cpus = threads)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
     // bisection knob: AQE's SMJ→shuffled-hash-join conversion builds
     // per-partition hash maps whose build side cannot spill — the one
     // join strategy that trades the sort's disk path for heap

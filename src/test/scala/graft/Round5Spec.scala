@@ -11,11 +11,7 @@ import graft.operators.{HeavyHitters, Packing, RangeJoin, TfIdf}
   * SemDeDup. */
 class Round5Spec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkFixture.spark
   import spark.implicits._
 
   // ----------------------------------------------------------- heavy hitters

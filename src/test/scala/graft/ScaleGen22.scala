@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** r22 scaling-probe data generator: writes a K-times replica of an SF dir
@@ -16,13 +15,8 @@ object ScaleGen22 {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, kStr) = args.take(3)
     val k = kStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GateHarness.session(cpus = 32)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     // per-table key columns that must shift per copy (offset = copy * span,
     // span = a power of ten above the table's max key so copies never clash)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling probe (test scope): replicate the sf0.1 documents table K times
@@ -14,12 +14,7 @@ import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val k = sys.env.getOrElse("SCALE_K", "5").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GateHarness.session(cpus = 32)
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
 
     def replicate(n: Int): DataFrame =
