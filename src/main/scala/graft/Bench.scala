@@ -36,25 +36,24 @@ object Bench {
     // recorded number).
     val warmupPasses = 1
     names.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      catch { case NonFatal(e) =>
-        System.err.println(s"[bench] warmup $name: ${e.getMessage}")
-      }
-      GateHarness.sweep(spark)
+      GateHarness.runGate(spark, sfDir, name)(_.queryExecution.toRdd.count())._1.failed
+        .foreach(e => System.err.println(s"[bench] warmup $name: ${e.getMessage}"))
     }
     // HEAVY-TAIL VARIANCE DIAGNOSIS (round 7): localCheckpoint blocks from
     // one query (dedup CC, pagerank, rrf, tfidf, packing, triangles all
-    // checkpoint) are released only when the DRIVER's GC collects the RDD
-    // handle and ContextCleaner fires — nondeterministic timing, so in the
-    // unified memory manager later queries see anywhere from zero to
+    // checkpoint) were released only when the JVM's GC collected the RDD
+    // handle and ContextCleaner fired — nondeterministic timing, so in the
+    // unified memory manager later queries saw anywhere from zero to
     // gigabytes of lingering storage competing with their shuffle memory.
     // That matched the observed signature exactly: the swinging queries
     // (q_dup_spans, q_pack_sequences, q_ngram_jaccard) sit alphabetically
     // AFTER the checkpoint-heavy dedup family, while light queries held
-    // steady. Mitigation: the storage sweep after each query. Evidence rides
-    // in the artifact: per-run peak storage bytes with cleanup on, and the
-    // count of RDDs evicted — at sf0.1 eviction counts in the hundreds
-    // confirm checkpoints were accumulating before.
+    // steady. Mitigation: each gate runs in its own `Stored` scope
+    // (GateHarness.runGate), which releases every frame the gate stored —
+    // checkpoints and cache entries alike — when the gate's run ends, so
+    // each run plans and times the same query. Evidence rides in the
+    // artifact: per-run peak storage bytes, read before the release, and
+    // the count of frames the scopes released ("rdds_evicted").
     val storagePeaks = scala.collection.mutable.ArrayBuffer[Long]()
     val evictions = scala.collection.mutable.ArrayBuffer[Int]()
     val samples: Seq[Seq[(String, Double)]] = (1 to runs).map { _ =>
@@ -62,18 +61,22 @@ object Bench {
       var evicted = 0
       val run = names.map { name =>
         val t0 = System.nanoTime()
-        // NonFatal only: an OOM or VM error must end the run, since a
-        // degraded JVM would skew every later timing (ADVICE r9)
-        try SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-        catch { case NonFatal(e) =>
+        // runGate catches NonFatal only: an OOM or VM error must end the
+        // run, since a degraded JVM would skew every later timing (ADVICE r9)
+        val (done, released) = GateHarness.runGate(spark, sfDir, name) { df =>
+          df.queryExecution.toRdd.count()
+          val dt = (System.nanoTime() - t0) / 1e9
+          peak = math.max(peak, spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum)
+          dt
+        }
+        evicted += released
+        val dt = done.fold({ e =>
           // failed queries are recorded in the JSON line too — a fast
           // failure must not be mistaken for a fast success
           if (!failures.contains(name)) failures += name
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        peak = math.max(peak, spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum)
-        evicted += GateHarness.sweep(spark)
+          (System.nanoTime() - t0) / 1e9
+        }, identity)
         name -> dt
       }
       storagePeaks += peak

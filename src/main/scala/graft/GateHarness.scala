@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
 
 /** What the gate mains (`Bench`, `Verify`, `PlanDump`, `Scratch`) share: the
-  * one session they run in, the choice of gates, the storage sweep between
-  * gates and the JSON string escape of what they write. */
+  * one session they run in, the choice of gates, the one step that runs a
+  * gate and the JSON string escape of what they write. */
 object GateHarness {
 
   /** Env int `name`, or `default` when unset. A value that is not an
@@ -58,16 +59,15 @@ object GateHarness {
     }
   }
 
-  /** Unpersists every persistent RDD of the session and returns how many it
-    * released. Call it between gates: each gate is fully evaluated before
-    * the next starts, so nothing needs the blocks again, while without the
-    * sweep a gate's checkpoints stay until driver GC runs the ContextCleaner
-    * and compete with later gates for execution memory. */
-  def sweep(spark: SparkSession): Int = {
-    val persisted = spark.sparkContext.getPersistentRDDs.values
-    persisted.foreach(_.unpersist(blocking = false))
-    persisted.size
-  }
+  /** Builds gate `name` over `sfDir`, hands it to `use` and then releases
+    * every frame the gate stored, all in one `Stored` scope. Returns what
+    * `use` returned, or the failure of the build or of `use` (a gate that
+    * fails must not end the run), with the number of frames released. A
+    * gate's stored frames thus last exactly as long as its run: none
+    * competes with a later gate for memory, and no later plan is matched
+    * against a cache entry this gate left behind. */
+  def runGate[A](spark: SparkSession, sfDir: String, name: String)(use: DataFrame => A): (Try[A], Int) =
+    Stored.counted(Try(use(SparkEntry.queries(name)(spark, sfDir))))
 
   /** `s` as a JSON string literal. Quote, backslash and every control char
     * below 0x20 are escaped: a raw tab or CR in oracle SQL would otherwise

@@ -1,7 +1,5 @@
 package graft
 
-import scala.util.control.NonFatal
-
 /** Dump `.explain("formatted")` for every declared query (or a named
   * subset) to a directory — the optimization-round audit tool: the judge
   * checks plan claims against these files, and grepping them for Exchange /
@@ -25,19 +23,16 @@ object PlanDump {
     dir.mkdirs()
     var failed = 0
     names.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
+      GateHarness.runGate(spark, sfDir, name) { df =>
         // queryExecution.explainString gives the same text explain() prints
         val txt = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         val w = new java.io.PrintWriter(new java.io.File(dir, s"$name.txt"), "UTF-8")
         try w.println(txt) finally w.close()
-        println(s"[plandump] $name ok")
-      } catch { case NonFatal(e) =>
+      }._1.fold({ e =>
         failed += 1
         println(s"[plandump] $name FAILED: ${e.getMessage}")
-      }
-      GateHarness.sweep(spark)
+      }, _ => println(s"[plandump] $name ok"))
     }
     println(s"[plandump] done: ${names.size - failed}/${names.size} ok, $failed failed")
     spark.stop()

@@ -5,11 +5,12 @@ package graft
 object Scratch {
   def main(args: Array[String]): Unit = {
     val spark = GateHarness.session()
-    val df = SparkEntry.entry(spark).cache()
-    val rows = df.count()
-    println(s"entry rows=$rows")
-    df.show(50, truncate = false)
-    df.unpersist()
+    Stored.scoped {
+      val df = Stored.cached(SparkEntry.entry(spark))
+      val rows = df.count()
+      println(s"entry rows=$rows")
+      df.show(50, truncate = false)
+    }
     spark.stop()
   }
 }

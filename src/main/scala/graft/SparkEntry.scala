@@ -47,6 +47,26 @@ object SparkEntry {
     ()
   }
 
+  /** A session of its own for a gate's streams: `s`'s runtime SQL conf,
+    * with the state-store sizing below on top. The caller's session is
+    * never changed, so no query running next to the gate sees the sizing.
+    *
+    * State-store sizing (r21): every stateful streaming query creates one
+    * state store instance PER SHUFFLE PARTITION PER MICRO-BATCH (tasks +
+    * delta files + commits) — per-batch fixed cost that scales with the
+    * partition count, not the data. State partitions should track
+    * stateful-KEY cardinality (event types x hour windows, user ids — tens),
+    * not core count, so they are sized min(defaultParallelism, 8); every
+    * gate is partition-count-invariant by construction (pinned by the
+    * InvarianceSpec matrix), so this changes no result. */
+  private def streamSession(s: SparkSession): SparkSession = {
+    val ss = s.newSession()
+    s.conf.getAll.foreach { case (k, v) => if (ss.conf.isModifiable(k)) ss.conf.set(k, v) }
+    ss.conf.set("spark.sql.shuffle.partitions",
+      math.min(s.sparkContext.defaultParallelism, 8).toString)
+    ss
+  }
+
   /** events.ts normalized to int64 nanos whatever the parquet physical type:
     * TIMESTAMP(NANOS) reads directly as long via nanosAsLong; a plain
     * TIMESTAMP (micros, as in the regenerated testdata) is converted with
@@ -155,12 +175,11 @@ object SparkEntry {
       require(broken.isEmpty, s"input contract violated: ${broken.mkString(", ")}")
     }
     // normalization-insensitive exact dedup (dedupKey collapses case/punct
-    // variants); checkpointed — it feeds the near-dup pair graph, the
+    // variants); stored — it feeds the near-dup pair graph, the
     // seed selection, AND the LSH dedup below
-    val exact = Dedup.exactRowsKeepBest(
+    val exact = Stored.now(Dedup.exactRowsKeepBest(
         docs.withColumn("_dk", gf.dedupKey(col("text"))), "doc_id", "_dk",
-        gf.qualityScore(col("text"))).drop("_dk")
-      .localCheckpoint()
+        gf.qualityScore(col("text"))).drop("_dk"))
     // near-dup pair graph: a vertex's clustering coefficient separates
     // template/boilerplate cliques (everything near-duplicates everything)
     // from organic chains; personalized PageRank from the highest-quality
@@ -187,10 +206,9 @@ object SparkEntry {
       .personalized(undirected, "idA", "idB", seeds, iterations = 3)
       .select(col("node").as("doc_id"), col("score").as("ppr"))
     // near-dup LSH keeps one doc per candidate group; deduped fans out into
-    // three branches (spans, lm, main join) — without the checkpoint the
+    // three branches (spans, lm, main join) — without the store the
     // LSH dedup subtree would run three times
-    val deduped = Dedup.minhashLsh(exact, "doc_id", "text")
-      .localCheckpoint()
+    val deduped = Stored.now(Dedup.minhashLsh(exact, "doc_id", "text"))
     val spans = Dedup.dupSpans(deduped, "doc_id", "text", n = 10)
       .select(col("doc_id"), col("dup_frac"))
     val lm = graft.operators.BigramLm.score(deduped, "doc_id", "text")
@@ -2363,11 +2381,10 @@ object SparkEntry {
       // seeded min-label spread over the supplier co-occurrence graph:
       // every 25th node seeds its own id as label; 3 synchronous rounds
       // color everything within 3 hops with the smallest reachable seed
-      // checkpoint: the basket quadratic feeds seeds AND propagation —
+      // stored: the basket quadratic feeds seeds AND propagation —
       // without it the co-occurrence join recomputes once per consumer
-      val edges = graft.operators.Basket.frequentPairs(
-        tbl(s, dir, "lineitem"), "l_orderkey", "l_suppkey", minSupport = 30)
-        .localCheckpoint(false)
+      val edges = Stored.once(graft.operators.Basket.frequentPairs(
+        tbl(s, dir, "lineitem"), "l_orderkey", "l_suppkey", minSupport = 30))
       val nodes = edges.select(col("item_a").as("v"))
         .unionAll(edges.select(col("item_b").as("v"))).distinct()
       val seeds = nodes.where(col("v") % 25 === 0)
@@ -2385,9 +2402,8 @@ object SparkEntry {
       // fixed-len-binary decimal and DuckDB HUGEINT->DECIMAL canonicalize
       // differently in the driver's hasher (r10/r11 hash-red with rows and
       // schema green, while both engines agreed locally).
-      val edges = graft.operators.Basket.frequentPairs(
-        tbl(s, dir, "lineitem"), "l_orderkey", "l_suppkey", minSupport = 30)
-        .localCheckpoint(false)
+      val edges = Stored.once(graft.operators.Basket.frequentPairs(
+        tbl(s, dir, "lineitem"), "l_orderkey", "l_suppkey", minSupport = 30))
       val nodes = edges.select(col("item_a").as("v"))
         .unionAll(edges.select(col("item_b").as("v"))).distinct()
       val seeds = nodes.where(col("v") % 25 === 0)
@@ -2782,24 +2798,20 @@ object SparkEntry {
       // fails the gate. The mojibake-repair and C4 line-clean stages are
       // no-ops on this corpus (no mojibake bytes, no line structure) and
       // carry their own gates (q_fix_mojibake, q_c4_clean).
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val toks = gf.tokenCount(col("text")).cast("long")
       val d0 = tbl(s, dir, "documents").select(col("doc_id"), col("lang"), col("text"))
       val st = gf.gopherStats(col("text"))
-      val q = d0.where(
+      val q = Stored.cached(d0.where(
           st.getField("n_words").between(30, 100000) &&
           st.getField("word_char_sum") >= st.getField("n_words") * 3 &&
           st.getField("word_char_sum") <= st.getField("n_words") * 10 &&
           st.getField("n_alpha_words") * 5 >= st.getField("n_words") * 4 &&
-          st.getField("n_stop_distinct") >= 1)
-        .persist(lvl)
-      val dd = Dedup.minhashLsh(q, "doc_id", "text",
-          signature = Some(t => gf.minhashPoly(gf.wordShingles(t, 5), 16)))
-        .persist(lvl)
-      val mx = graft.operators.Sampling.tokenBudgetMixture(dd, "doc_id", "lang",
+          st.getField("n_stop_distinct") >= 1))
+      val dd = Stored.cached(Dedup.minhashLsh(q, "doc_id", "text",
+          signature = Some(t => gf.minhashPoly(gf.wordShingles(t, 5), 16))))
+      val mx = Stored.cached(graft.operators.Sampling.tokenBudgetMixture(dd, "doc_id", "lang",
           toks, Map("en" -> 5000L, "de" -> 2000L, "es" -> 1000L,
-            "zh" -> 1000000000L), salt = "mix1")
-        .persist(lvl)
+            "zh" -> 1000000000L), salt = "mix1"))
       val packed = graft.operators.Packing.packSequences(mx, "doc_id", toks, 512)
       // n_units = surviving docs per stage, CHUNKS for the pack stage
       def stageRow(name: String, df: DataFrame) =
@@ -2828,14 +2840,12 @@ object SparkEntry {
       // the final Q numerator must come out EXACTLY zero — Σ(4m·e_c −
       // d_c²) = 0 for the trivial partition only if every stage count,
       // degree, and edge census is exact on both engines.
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val edges = graft.operators.Basket.frequentPairs(
-        tbl(s, dir, "lineitem"), "l_orderkey", "l_suppkey", minSupport = 30)
-        .persist(lvl)
-      val core = graft.operators.Triangles.kCoreEdges(
-        edges, "item_a", "item_b", k = 4, rounds = 8).persist(lvl)
-      val tri = graft.operators.Triangles.enumerate(core, "a", "b").persist(lvl)
-      val cc = graft.dedup.Dedup.connectedComponents(core, "a", "b").persist(lvl)
+      val edges = Stored.cached(graft.operators.Basket.frequentPairs(
+        tbl(s, dir, "lineitem"), "l_orderkey", "l_suppkey", minSupport = 30))
+      val core = Stored.cached(graft.operators.Triangles.kCoreEdges(
+        edges, "item_a", "item_b", k = 4, rounds = 8))
+      val tri = Stored.cached(graft.operators.Triangles.enumerate(core, "a", "b"))
+      val cc = Stored.cached(graft.dedup.Dedup.connectedComponents(core, "a", "b"))
       val mod = graft.operators.Modularity.of(core, "a", "b",
         cc, "id", "component")
       def nodesOf(df: DataFrame, cols: Seq[String]) = df
@@ -2869,7 +2879,6 @@ object SparkEntry {
       // and the int64 DCG mass as the eval checksum. Scores round to 6dp
       // BEFORE every ranking so rank order is a function of
       // cross-engine-equal values (the q_rrf_fusion rule).
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val docs = tbl(s, dir, "documents")
       val emb = tbl(s, dir, "embeddings")
       val qterms = retrievalQueryTerms(s, dir)
@@ -2897,24 +2906,21 @@ object SparkEntry {
       }
       val wLex = Window.partitionBy(col("query_id"))
         .orderBy(col("score").desc, col("doc_id"))
-      val lex = graft.operators.Bm25
+      val lex = Stored.cached(graft.operators.Bm25
         .scoreMany(docs, "doc_id", "text", termsDf, padTo = 10)
         .select(col("query_id"), col("doc_id"), graft.functions.gf.roundHalfUp(col("bm25"), 6).as("score"))
         .withColumn("_rn", row_number().over(wLex))
-        .where(col("_rn") <= 10).drop("_rn")
-        .persist(lvl)
-      val vec = Ann.ivfTopKMany(emb, "vec_id", "embedding", centroids,
+        .where(col("_rn") <= 10).drop("_rn"))
+      val vec = Stored.cached(Ann.ivfTopKMany(emb, "vec_id", "embedding", centroids,
           qvecs.toSeq, 10, nprobe = 4)
         .select(col("query_id"), col("vec_id").as("doc_id"),
-          graft.functions.gf.roundHalfUp(col("cosine"), 6).as("score"))
-        .persist(lvl)
+          graft.functions.gf.roundHalfUp(col("cosine"), 6).as("score")))
       val wq = Window.partitionBy(col("query_id"))
         .orderBy(graft.functions.gf.roundHalfUp(col("rrf"), 6).desc, col("doc_id"))
-      val fused = graft.operators.Fusion
+      val fused = Stored.cached(graft.operators.Fusion
         .rrfBy(Seq(lex, vec), "query_id", "doc_id", "score")
         .withColumn("rank", row_number().over(wq).cast("long"))
-        .where(col("rank") <= 10)
-        .persist(lvl)
+        .where(col("rank") <= 10))
       // anchors re-enter as a literal frame from the same collected rows —
       // no fourth scan branch over embeddings for 8 (id, label) pairs
       val anchors = {
@@ -2956,10 +2962,8 @@ object SparkEntry {
       // Every stage count is an exact integer over the previous stage's
       // survivor population, so a divergence anywhere in the composition
       // fails the gate (the q_curation_e2e idea for the events family).
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val weekNs = 7L * 86400 * 1000000000L
-      val ev = events(s, dir).withColumn("ts_us", expr("ts DIV 1000"))
-        .persist(lvl)
+      val ev = Stored.cached(events(s, dir).withColumn("ts_us", expr("ts DIV 1000")))
       val byUser = Window.partitionBy(col("user_id"))
         .orderBy(col("ts_us"), col("event_id"))
       val nSess = ev
@@ -2967,18 +2971,16 @@ object SparkEntry {
         .withColumn("new_sess", when(col("prev_ts").isNull ||
           col("ts_us") - col("prev_ts") > 30L * 60 * 1000000L, 1L).otherwise(0L))
         .groupBy(col("user_id")).agg(sum(col("new_sess")).as("n_sessions"))
-      val engaged = nSess.where(col("n_sessions") >= 2).persist(lvl)
-      val evEng = ev.join(engaged.select("user_id"), Seq("user_id"), "left_semi")
-        .persist(lvl)
+      val engaged = Stored.cached(nSess.where(col("n_sessions") >= 2))
+      val evEng = Stored.cached(ev.join(engaged.select("user_id"), Seq("user_id"), "left_semi"))
       val reach = graft.operators.EventAnalytics.funnelReach(evEng, "user_id",
         "event_type", "ts", Seq("view", "click", "purchase"), windowNs = weekNs)
-      val conv = reach.last.select(col("_u").as("user_id")).persist(lvl)
-      val evConv = evEng.join(conv, Seq("user_id"), "left_semi").persist(lvl)
-      val attr = graft.operators.Attribution.attribute(evConv, "user_id",
+      val conv = Stored.cached(reach.last.select(col("_u").as("user_id")))
+      val evConv = Stored.cached(evEng.join(conv, Seq("user_id"), "left_semi"))
+      val attr = Stored.cached(graft.operators.Attribution.attribute(evConv, "user_id",
           "ts_us", "event_type", "event_id",
           touchTypes = Seq("click", "view"), convType = "purchase",
-          lookback = 7L * 24 * 3600 * 1000000L)
-        .persist(lvl)
+          lookback = 7L * 24 * 3600 * 1000000L))
       val ret = graft.operators.EventAnalytics.retention(evConv, "user_id",
         "ts", weekNs)
       val r0 = ev.agg(count(lit(1)).as("n_units"),
@@ -3016,11 +3018,9 @@ object SparkEntry {
       // driver twin and independently replays every RELATIONAL stage
       // (sniff counts, brute-force hamming pairs, bin checksum, argmax
       // buckets) from that table. All stage values are exact integers.
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val corpus = tbl(s, dir, "documents")
+      val corpus = Stored.cached(tbl(s, dir, "documents")
         .select(col("doc_id"),
-          graft.operators.MediaCorpus.bytesCol(col("doc_id")).as("bytes"))
-        .persist(lvl)
+          graft.operators.MediaCorpus.bytesCol(col("doc_id")).as("bytes")))
       val sniffed = corpus.select(
         graft.operators.SniffExpr.sniffFormat(col("bytes")).as("fmt"))
       // decode-once (r22): ONE expression yields struct(dhash, hist) per
@@ -3030,12 +3030,11 @@ object SparkEntry {
       // the near-dup join consumes the PRE-COMPUTED dhash through
       // simhashPairs' pluggable-sketch seam (identity fn) instead of
       // re-decoding the corpus.
-      val decoded = corpus
+      val decoded = Stored.cached(corpus
         .select(col("doc_id"),
           graft.operators.MediaOps.featuresCol(col("bytes")).as("_mf"))
         .select(col("doc_id"), col("_mf.dhash").as("dhash"), col("_mf.hist").as("emb"))
-        .where(col("dhash").isNotNull)
-        .persist(lvl)
+        .where(col("dhash").isNotNull))
       val pairs = graft.dedup.Dedup.simhashPairs(
         decoded.select(col("doc_id"), col("dhash")), "doc_id", "dhash",
         maxHamming = 6, simhashFn = c => c, bits = 64)
@@ -3091,27 +3090,23 @@ object SparkEntry {
       // (fmt, ahash, envelope micros) computed by the driver twin and
       // independently replays every RELATIONAL stage. The q_media_e2e
       // pattern, applied to the audio leg (r13 verdict item #5).
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      val corpus = tbl(s, dir, "documents")
+      val corpus = Stored.cached(tbl(s, dir, "documents")
         .select(col("doc_id"),
-          graft.operators.AudioCorpus.bytesCol(col("doc_id")).as("bytes"))
-        .persist(lvl)
+          graft.operators.AudioCorpus.bytesCol(col("doc_id")).as("bytes")))
       val sniffed = corpus.select(
         graft.operators.SniffExpr.sniffFormat(col("bytes")).as("fmt"))
-      val decoded = corpus
+      val decoded = Stored.cached(corpus
         .select(col("doc_id"), col("bytes"),
           graft.operators.AudioOps.aHash(col("bytes")).as("ahash"))
-        .where(col("ahash").isNotNull)
-        .persist(lvl)
+        .where(col("ahash").isNotNull))
       val pairs = graft.operators.AudioOps.audioNearDupPairs(
         corpus, "doc_id", "bytes", maxHamming = 6)
-      val embedded = decoded
+      val embedded = Stored.cached(decoded
         .select(col("doc_id"),
           graft.operators.AudioOps.envelopeCol(col("bytes")).as("emb"))
         .withColumn("bins",
           transform(col("emb"),
-            x => round(x.cast("double") * lit(1000000.0)).cast("long")))
-        .persist(lvl)
+            x => round(x.cast("double") * lit(1000000.0)).cast("long"))))
       val storePath = java.nio.file.Files
         .createTempDirectory("graft_audio_store").toString
       val store = new graft.sources.ParquetVectorStore(storePath)
@@ -3167,24 +3162,19 @@ object SparkEntry {
       // computed by the driver twin and independently replays every
       // RELATIONAL stage (r13 verdict: audio/video were the last unit-only
       // media members; this closes video).
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val vc = graft.operators.VideoCorpus
-      val corpus = tbl(s, dir, "documents")
-        .select(col("doc_id"), vc.bytesCol(col("doc_id")).as("bytes"))
-        .persist(lvl)
-      val frames = graft.operators.VideoOps
-        .frames(corpus, "doc_id", "bytes", everyN = vc.SampleEvery)
-        .persist(lvl)
-      val dec = frames
+      val corpus = Stored.cached(tbl(s, dir, "documents")
+        .select(col("doc_id"), vc.bytesCol(col("doc_id")).as("bytes")))
+      val frames = Stored.cached(graft.operators.VideoOps
+        .frames(corpus, "doc_id", "bytes", everyN = vc.SampleEvery))
+      val dec = Stored.cached(frames
         .select(col("doc_id"), col("fidx"), col("frame"),
           graft.operators.MediaOps.dHash(col("frame")).as("dhash"))
-        .where(col("dhash").isNotNull)
-        .persist(lvl)
+        .where(col("dhash").isNotNull))
       val cuts = graft.operators.VideoOps
         .sceneCuts(dec, "doc_id", "fidx", "dhash", threshold = vc.CutThreshold)
-      val sigs = graft.operators.VideoOps
-        .bitMajoritySignature(dec, "doc_id", "dhash")
-        .persist(lvl)
+      val sigs = Stored.cached(graft.operators.VideoOps
+        .bitMajoritySignature(dec, "doc_id", "dhash"))
       val pairs = graft.operators.VideoOps
         .videoNearDupPairs(sigs, "doc_id", "signature", maxHamming = 6)
       val keyframe = dec
@@ -3250,50 +3240,35 @@ object SparkEntry {
       val tmpIn = java.nio.file.Files.createTempDirectory("graft_stream_in").toString
       ev.repartition(8).write.mode("overwrite").parquet(tmpIn)
       val schema = s.read.parquet(tmpIn).schema
-      def src = s.readStream.schema(schema)
+      // the streams, their memory sinks and the reads of those sinks all
+      // run on a session of their own (streamSession)
+      val ss = streamSession(s)
+      def src = ss.readStream.schema(schema)
         .option("maxFilesPerTrigger", "2").parquet(tmpIn)
-      // state-store partition sizing (r21): every stateful streaming query
-      // creates one state store instance PER SHUFFLE PARTITION PER
-      // MICRO-BATCH (tasks + delta files + commits) — per-batch fixed cost
-      // that scales with the partition count, not the data. State
-      // partitions should track stateful-KEY cardinality (here: event
-      // types x hour windows, user ids — tens), not core count. Sized
-      // scale-adaptively as min(defaultParallelism, 8); every gate is
-      // partition-count-invariant by construction (pinned by the
-      // InvarianceSpec matrix), so this changes no result. Restored after
-      // the streams finish so batch queries are untouched.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(s.sparkContext.defaultParallelism, 8).toString)
       val tag = java.lang.Long.toHexString(System.nanoTime())
       val outDir = java.nio.file.Files.createTempDirectory("graft_stream_out").toString
-      // restore in a finally (ADVICE r21 item 1): Bench/Verify catch
-      // per-query failures and keep going, so a failing stream must not
-      // leave every subsequent query in the shared session at 8 partitions
-      try {
-        // the three queries are independent streams over the same files —
-        // start all three and await all three (wall time ~ the slowest one,
-        // not the sum; each keeps its own state, checkpoint, and sink)
-        val q1 = src
-          .withColumn("ets", timestamp_micros(expr("ts div 1000")))
-          .groupBy(window(col("ets"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName(s"gs_win_$tag")
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        val q2 = src.dropDuplicates("user_id")
-          .writeStream.format("memory").queryName(s"gs_dd_$tag")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        val q3 = src.where(col("event_type") === "click")
-          .writeStream.format("parquet").option("path", s"$outDir/data")
-          .option("checkpointLocation", s"$outDir/ckpt")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q1.awaitTermination(); q2.awaitTermination(); q3.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      val wins = s.table(s"gs_win_$tag")
+      // the three queries are independent streams over the same files —
+      // start all three and await all three (wall time ~ the slowest one,
+      // not the sum; each keeps its own state, checkpoint, and sink)
+      val q1 = src
+        .withColumn("ets", timestamp_micros(expr("ts div 1000")))
+        .groupBy(window(col("ets"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .writeStream.format("memory").queryName(s"gs_win_$tag")
+        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+      val q2 = src.dropDuplicates("user_id")
+        .writeStream.format("memory").queryName(s"gs_dd_$tag")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      val q3 = src.where(col("event_type") === "click")
+        .writeStream.format("parquet").option("path", s"$outDir/data")
+        .option("checkpointLocation", s"$outDir/ckpt")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      q1.awaitTermination(); q2.awaitTermination(); q3.awaitTermination()
+      val wins = ss.table(s"gs_win_$tag")
         .select(expr("unix_micros(window.start) div 3600000000").as("h"),
           col("event_type"), col("n"))
-      val dd = s.table(s"gs_dd_$tag")
-      val sunk = s.read.parquet(s"$outDir/data")
+      val dd = ss.table(s"gs_dd_$tag")
+      val sunk = ss.read.parquet(s"$outDir/data")
       val r0 = wins.agg(coalesce(sum(col("n")), lit(0L)).as("n_units"),
           count_distinct(col("event_type")).as("aux"))
         .select(lit("00_ingest").as("stage"), col("n_units"), col("aux"))
@@ -3306,14 +3281,13 @@ object SparkEntry {
       val r3 = sunk.agg(count(lit(1)).as("n_units"),
           coalesce(sum(col("user_id")), lit(0L)).as("aux"))
         .select(lit("03_sink").as("stage"), col("n_units"), col("aux"))
-      val res = r0.unionAll(r1).unionAll(r2).unionAll(r3)
+      // 4 rows, stored to detach them from the temp views and sink files
+      // the cleanup below removes
+      val res = Stored.now(r0.unionAll(r1).unionAll(r2).unionAll(r3)
         .select(col("stage"), col("n_units").cast("long"), col("aux").cast("long"))
-        .orderBy(col("stage"))
-        // 4 rows: detach from the temp views and sink files so repeated
-        // invocations (bench runs 4x) don't accumulate session state
-        .localCheckpoint()
-      s.catalog.dropTempView(s"gs_win_$tag")
-      s.catalog.dropTempView(s"gs_dd_$tag")
+        .orderBy(col("stage")))
+      ss.catalog.dropTempView(s"gs_win_$tag")
+      ss.catalog.dropTempView(s"gs_dd_$tag")
       rmTree(java.nio.file.Paths.get(tmpIn))
       rmTree(java.nio.file.Paths.get(outDir))
       res
@@ -3382,32 +3356,24 @@ object SparkEntry {
       rmTree(tmp)
       val schema = s.read.parquet(inDir.toString).schema
       val tag = java.lang.Long.toHexString(System.nanoTime())
-      // state-store partition sizing — see q_stream_e2e: per-micro-batch
-      // state cost scales with shuffle partitions, and this stream's
-      // stateful keys are ~10 hour-windows; result is partition-count-
-      // invariant (watermark = global max over prior batches)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        math.min(s.sparkContext.defaultParallelism, 8).toString)
-      // restore in a finally (ADVICE r21 item 1): a failing stream must not
-      // leave the shared session at 8 partitions for later queries
-      try {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-          .withWatermark("ets", "90 minutes")
-          .groupBy(window(col("ets"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("event_id")).as("checksum"))
-          .writeStream.format("memory").queryName(s"gs_ev_$tag")
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      val out = s.table(s"gs_ev_$tag")
+      // state-store sizing — see streamSession: this stream's stateful
+      // keys are ~10 hour-windows; the result is partition-count-invariant
+      // (watermark = global max over prior batches)
+      val ss = streamSession(s)
+      val q = ss.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+        .withWatermark("ets", "90 minutes")
+        .groupBy(window(col("ets"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("event_id")).as("checksum"))
+        .writeStream.format("memory").queryName(s"gs_ev_$tag")
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val out = Stored.now(ss.table(s"gs_ev_$tag")
         .select(expr("unix_seconds(window.start) div 3600").as("h"),
           col("event_type"), col("n").cast("long"),
           col("checksum").cast("long"))
-        .orderBy(col("h"), col("event_type"))
-        .localCheckpoint() // detach from the temp view before cleanup
-      s.catalog.dropTempView(s"gs_ev_$tag")
+        .orderBy(col("h"), col("event_type")))
+      ss.catalog.dropTempView(s"gs_ev_$tag")
       rmTree(inDir)
       out
     })
@@ -3585,10 +3551,9 @@ object SparkEntry {
         col("embedding").cast("array<double>").as("qv"), col("label").as("qlbl"))
     val cands = emb.select(col("vec_id").as("doc_id"),
       col("embedding").cast("array<double>").as("cv"), col("label").as("clbl"))
-    val scored = cands.crossJoin(broadcast(anchors))
+    val scored = Stored.once(cands.crossJoin(broadcast(anchors))
       .select(col("query_id"), col("doc_id"), col("qlbl"), col("clbl"),
-        graft.functions.gf.roundHalfUp(gf.cosineSimilarity(col("qv"), col("cv")), 6).as("cos"))
-      .localCheckpoint(false) // feeds retrieved AND relevant
+        graft.functions.gf.roundHalfUp(gf.cosineSimilarity(col("qv"), col("cv")), 6).as("cos")))
     val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), col("doc_id"))
     val retrieved = scored
       .withColumn("rank", row_number().over(w).cast("long"))

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import scala.util.control.NonFatal
 
 /** Correctness dump: each gate's result → parquet, plus oracle_sql.json,
   * for a DuckDB compare (`tools/check_oracle.py`). With the optional
@@ -48,12 +47,9 @@ object Verify {
     fs.mkdirs(out)
     names.foreach { name =>
       System.err.println(s"[verify] running $name")
-      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      GateHarness.sweep(spark)
+      GateHarness.runGate(spark, sfDir, name)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))._1.failed
+        .foreach(e => System.err.println(s"[verify] $name failed: ${e.getMessage}"))
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.gf
@@ -420,11 +421,10 @@ object Ann {
       .withColumn("_rn", row_number().over(wTop)).where(col("_rn") <= k)
       .groupBy(col("_tid"), col("_lbl")).agg(count(lit(1)).as("votes"))
     val wVote = Window.partitionBy(col("_tid")).orderBy(desc("votes"), col("_lbl"))
-    votes.withColumn("_r", row_number().over(wVote)).where(col("_r") === 1)
-      .select(col("_tid").as(id), col("_lbl").as(label), col("votes"))
-      // lazy checkpoint before the trailing sort: the range partitioner's
-      // sampling pass otherwise re-executes the whole crossJoin chain
-      .localCheckpoint(false)
+    // stored before the trailing sort: the range partitioner's sampling
+    // pass otherwise re-executes the whole crossJoin chain
+    Stored.once(votes.withColumn("_r", row_number().over(wVote)).where(col("_r") === 1)
+      .select(col("_tid").as(id), col("_lbl").as(label), col("votes")))
       .orderBy(col(id))
   }
 
@@ -454,11 +454,10 @@ object Ann {
       .select(col("anchor_id"), col("neg_id"),
         graft.functions.gf.roundHalfUp(gf.cosineSimilarity(col("_av"), col("_cv")), 6).as("cosine"))
     val w = Window.partitionBy(col("anchor_id")).orderBy(desc("cosine"), col("neg_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      // lazy checkpoint before the trailing sort (anchors x k rows): the
-      // sort's sampling pass must not re-run the corpus-wide scoring join
-      .localCheckpoint(false)
+    // stored before the trailing sort (anchors x k rows): the sort's
+    // sampling pass must not re-run the corpus-wide scoring join
+    Stored.once(scored.withColumn("rank", row_number().over(w).cast("long"))
+      .where(col("rank") <= k))
       .orderBy(col("anchor_id"), col("rank"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.gf
@@ -22,11 +23,10 @@ import graft.functions.gf
  * exactRowsKeepBest (aggregate side + semi-join side + null-text union),
  * decontaminate and decontaminateBloom (shingle branch + anti-join side),
  * dedupIncrement (history joins + keep-set + semi-join side) — therefore
- * read it ONCE themselves, through a `localCheckpoint` that every branch
- * reads (lazy in most: the first job fills it; eager in decontamination,
- * see dropContaminatedRows, and in dedupIncrement); its blocks are released
- * by the ContextCleaner when the result frame is garbage-collected. Callers
- * need not persist their input.
+ * read it ONCE themselves, through one stored copy (`graft.Stored`) that
+ * every branch reads: `once` in most, `now` in decontamination (see
+ * dropContaminatedRows) and in dedupIncrement. Callers need not store
+ * their input.
  */
 object Dedup {
 
@@ -98,11 +98,11 @@ object Dedup {
    * (groupBy equates nulls) but never matched the equi-semi-join (join
    * EqualTo does not), silently DELETING every binary-only document.
    *
-   * The input is read once: a lazy `localCheckpoint(false)` that the
-   * aggregate side, the semi-join side and the null-text union all read.
+   * The input is read once: one stored copy that the aggregate side, the
+   * semi-join side and the null-text union all read.
    */
   def exactRows(df: DataFrame, id: String, text: String): DataFrame = {
-    val in = df.localCheckpoint(false)
+    val in = Stored.once(df)
     val hashed = in.where(col(text).isNotNull)
       .withColumn("_content_hash", xxhash64(col(text)))
       .withColumn("_content_md5", unhex(md5(col(text))))
@@ -127,12 +127,12 @@ object Dedup {
    * partitions before the shuffle (min_by over a struct is an order-free
    * aggregate — no window, so a pathological million-copy document cannot
    * funnel one task), and text rides only as payload on the kept side.
-   * Like exactRows, it reads its input once through one lazy checkpoint.
+   * Like exactRows, it reads its input once through one stored copy.
    */
   def exactRowsKeepBest(df: DataFrame, id: String, text: String,
                         better: Column): DataFrame = {
     // null-text rows bypass the hash path entirely (see exactRows)
-    val in = df.localCheckpoint(false)
+    val in = Stored.once(df)
     val hashed = in.where(col(text).isNotNull)
       .withColumn("_content_hash", xxhash64(col(text)))
       .withColumn("_content_md5", unhex(md5(col(text))))
@@ -243,11 +243,9 @@ object Dedup {
    * keeps ids, as `minhashLsh` does.
    *
    * What is read, shuffled and broadcast:
-   *  - the batch is read, hashed and sketched once, by one eager
-   *    `localCheckpoint` job that every branch then reads; eager, because
-   *    with a lazy checkpoint AQE's concurrent first stages all run its
-   *    lineage and their tasks report metrics the driver has already
-   *    dropped ("Failed to update accumulator" errors). The batch keeps
+   *  - the batch is read, hashed and sketched once, by one job that
+   *    stores it (`Stored.now`: AQE submits the branches' first stages
+   *    concurrently) and that every branch then reads. The batch keeps
    *    its input partitioning: a rebalance before the sketch costs one
    *    more shuffle and measured no faster on 40-row appends;
    *  - history enters as two plain projections, its content keys and its
@@ -267,11 +265,10 @@ object Dedup {
                      signature: Option[Column => Column] = None): DataFrame = {
     val sigFn = signature.getOrElse((t: Column) =>
       gf.minhashSignature(gf.wordShingles(t, shingleSize), numHashes))
-    val in = batch
+    val in = Stored.now(batch
       .withColumn("_ch", xxhash64(col(text)))
       .withColumn("_cm", unhex(md5(col(text))))
-      .withColumn("_sig", sigFn(col(text)))
-      .localCheckpoint()
+      .withColumn("_sig", sigFn(col(text))))
     val exactSurv = in.join(
       history.select(col("content_hash").as("_ch"), col("content_md5").as("_cm")),
       Seq("_ch", "_cm"), "left_anti")
@@ -300,8 +297,8 @@ object Dedup {
    * (the round-2 bench regression) disappears while producing the
    * identical kept set.
    *
-   * The input is read once: a lazy `localCheckpoint(false)` that the
-   * keep-set job fills and the semi-join side reads.
+   * The input is read once: one stored copy that the keep-set job fills
+   * and the semi-join side reads.
    */
   def minhashLsh(df: DataFrame, id: String, text: String,
                  shingleSize: Int = 5, numHashes: Int = 16,
@@ -309,7 +306,7 @@ object Dedup {
                  signature: Option[Column => Column] = None): DataFrame = {
     val sigFn = signature.getOrElse((t: Column) =>
       gf.minhashSignature(gf.wordShingles(t, shingleSize), numHashes))
-    val in = df.localCheckpoint(false)
+    val in = Stored.once(df)
     val sig = rebalance(in.select(col(id).as("_id"), col(text).as("_t")))
       .select(col("_id"), sigFn(col("_t")).as("_sig"))
     in.join(minhashLshKeepIds(sig, id, numHashes, bands, threshold),
@@ -402,14 +399,14 @@ object Dedup {
     // warm q_video_e2e pairs stage carried 14 live Exchanges and 6
     // ObjectHashAggregates, zero reused). The frame is support-sized
     // (distinct sketches), the same bound as FuzzyJoin's load-bearing
-    // internal persist; Bench/Verify sweep leaked persists between queries.
+    // internal store.
     // `persistGroups=false` opts out for callers whose sketch is cheaper to
     // recompute than the cache-fill barrier costs (measured: the polynomial
     // text sketch at sf0.1, 1.26→1.48 s persisted, while the decode-backed
     // aHash/dHash sketches win 0.83×/0.89×).
     val groupsBare = hashed.groupBy(col("_sh")).agg(collect_list(col("_id")).as("_ids"))
     val groups = if (persistGroups)
-      groupsBare.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Stored.cached(groupsBare)
     else groupsBare
     // (a) intra-group pairs: identical sketch -> hamming 0
     val intra = groups.where(size(col("_ids")) > 1)
@@ -656,9 +653,8 @@ object Dedup {
    * in MapReduce and Beyond", SoCC'14 — the standard shuffle-bounded CC for
    * corpora where near-dup relations chain: A~B, B~C but not A~C).
    * Converges in O(log n) rounds on any graph, each round two aggregate +
-   * join passes and a distinct; `localCheckpoint` truncates the otherwise
-   * exponentially-growing iterative lineage (swap for reliable
-   * `checkpoint` on a cluster with a checkpoint dir).
+   * join passes and a distinct; storing each round's edges truncates the
+   * otherwise exponentially-growing iterative lineage.
    *
    * Returns (id, component) for every node that appears in `edges`,
    * component = smallest id reachable. Greedy min-id dedup (minhashLsh) is
@@ -698,12 +694,11 @@ object Dedup {
     // graph pays ~12 rounds x 5 stages of empty-task scheduling. One
     // partition per 100k edges, floor 1, cap at the session default.
     val parallelism = edges.sparkSession.sparkContext.defaultParallelism
-    var e = edges
+    var e = Stored.now(edges
       .select(col(src).cast(idType).as("u"), col(dst).cast(idType).as("v"))
       .where(col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val edgeCount = e.count()
     // Size-gated local finish: below the threshold the residual graph fits
     // in bounded driver memory — honestly accounted: 1M edges collect as
@@ -732,7 +727,7 @@ object Dedup {
         .select(col("id"), coalesce(col("component"), col("id")).as("component"))
     }
     val nParts = math.max(1, math.min(parallelism, (edgeCount / 100000L).toInt))
-    e = e.repartition(nParts).localCheckpoint()
+    e = Stored.now(e.repartition(nParts))
     var fingerprint = -1L
     var iter = 0
     var converged = false
@@ -756,18 +751,12 @@ object Dedup {
       // small-star: key each edge by its larger endpoint; all smaller
       // neighbors (and the center) hook onto the minimum
       val smallMin = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val small = large.join(smallMin, "u")
+      val small = Stored.once(large.join(smallMin, "u")
         .select(col("v").as("u"), col("m").as("v"))
         .unionAll(smallMin.select(col("u"), col("m").as("v")))
         .where(col("u") =!= col("v"))
         .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-        .distinct()
-        // LAZY checkpoint: the fingerprint aggregation below is the action
-        // that materializes it, so each round runs ONE job, not two (an
-        // eager checkpoint + a separate fingerprint head() doubled the
-        // per-round scheduling cost, which dominates when the edge set is
-        // far smaller than the corpus)
-        .localCheckpoint(false)
+        .distinct())
       // convergence: order-independent edge-set fingerprint (count + xor of
       // edge hashes — xor, not sum: ANSI mode makes a long-sum overflow
       // throw, and edges are distinct so no pair cancels)
@@ -903,21 +892,16 @@ object Dedup {
   }
 
   /** Drop every corpus row for which `hits` keeps one of its (_row, _sh)
-    * shingle rows. Each row gets a surrogate key, and ONE eager checkpoint
-    * stores every row with its surrogate before either branch is planned:
-    * the shingle branch and the anti-join side then read the same stored
-    * rows, so the input plan runs once and the position-dependent
-    * `monotonically_increasing_id` is computed once per row. A lazy
-    * checkpoint would not do: the two branches are separate map stages that
-    * AQE submits concurrently, so on several executors (or under
-    * speculation) a partition could be computed twice, in two row orders
-    * after an upstream shuffle, and give a row two surrogates. Matching on
+    * shingle rows. Each row gets a surrogate key, and every row is stored
+    * with its surrogate before either branch is planned: the shingle
+    * branch and the anti-join side then read the same stored rows, so the
+    * input plan runs once and the position-dependent
+    * `monotonically_increasing_id` is computed once per row. Matching on
     * the surrogate, a null or shared document id cannot make a contaminated
     * row survive or a clean row drop. */
   private def dropContaminatedRows(corpus: DataFrame, text: String, n: Int)
                                   (hits: DataFrame => DataFrame): DataFrame = {
-    val rows = corpus.withColumn("_row", monotonically_increasing_id())
-      .localCheckpoint()
+    val rows = Stored.now(corpus.withColumn("_row", monotonically_increasing_id()))
     val cSh = rows.select(col("_row"),
       explode(array_distinct(gf.wordShingles(col(text), n))).as("_sh"))
     val contaminated = hits(cSh).select(col("_row")).distinct()
@@ -977,14 +961,11 @@ object Dedup {
                          text: String, n: Int = 8,
                          fpp: Double = 0.001): DataFrame = {
     // the benchmark shingle set is consumed three times (count, filter
-    // build, exact verify) — materialize it once (localCheckpoint: blocks
-    // are dropped by the ContextCleaner when the frame is GC'd, unlike a
-    // persist that would leak one cache entry per call); benchmark-sized,
-    // the small side by construction
-    val bSh = benchmark
+    // build, exact verify) — stored once; benchmark-sized, the small side
+    // by construction
+    val bSh = Stored.now(benchmark
       .select(explode(array_distinct(gf.wordShingles(col(text), n))).as("_sh"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // distributed build + driver merge of the bits (stat.bloomFilter
     // tree-aggregates partial filters; only bit arrays hit the driver)
     val expected = math.max(1L, bSh.count())

@@ -1,5 +1,6 @@
 package graft.docset
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -630,11 +631,10 @@ final class DocSet(val ds: Dataset[Document]) extends Serializable {
     // distance <= threshold is estimate >= 1 - threshold. numHashes MUST
     // match sketch(number): a sketch of another length is not comparable
     // on this band layout, so it becomes a null signature and is KEPT.
-    // The input is read once: a lazy checkpoint that the keep-set's first
-    // job fills and that the keep-set's branches and the semi-join side all
-    // read, as in Dedup.minhashLsh; otherwise each would re-run the whole
-    // upstream pipeline.
-    val in = ds.toDF().localCheckpoint(false)
+    // The input is read once: the keep-set's branches and the semi-join
+    // side all read one stored copy, as in Dedup.minhashLsh; otherwise each
+    // would re-run the whole upstream pipeline.
+    val in = Stored.once(ds.toDF())
     val sig = in.select(col("docId").as("_id"),
       when(size(col("shingles")) === numHashes, col("shingles")).as("_sig"))
     val keep = graft.dedup.Dedup.minhashLshKeepIds(sig, "docId", numHashes, bands,
@@ -859,13 +859,13 @@ final class DocSet(val ds: Dataset[Document]) extends Serializable {
       transform(this).ds.write.mode("overwrite").parquet(path)
     } else {
       val storedIds = spark.read.parquet(path).select(col("docId"))
-      // persist: the delta is consumed twice (emptiness probe + append
+      // stored: the delta is consumed twice (emptiness probe + append
       // write); without it the source scan + anti-join would run two jobs
-      val fresh = ds.join(storedIds, Seq("docId"), "left_anti").as[Document](docEnc).persist()
-      try {
+      Stored.scoped {
+        val fresh = Stored.cached(ds.join(storedIds, Seq("docId"), "left_anti").as[Document](docEnc))
         if (!fresh.isEmpty)
           transform(wrap(fresh)).ds.write.mode("append").parquet(path)
-      } finally fresh.unpersist()
+      }
     }
     wrap(spark.read.parquet(path).as[Document](docEnc))
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,7 @@ object Basket {
 
   /** Association rules a -> b from the frequent pairs: confidence =
     * support(a,b) / support(a), both directions, exact-ratio doubles.
-    * The deduped (basket, item) table materializes ONCE (localCheckpoint)
+    * The deduped (basket, item) table is stored ONCE
     * and feeds both the item supports and the pair self-join — three
     * derivations of the same distinct would otherwise each rescan the
     * source (branch column sets differ, so AQE stage reuse cannot dedup
@@ -37,14 +38,14 @@ object Basket {
   def rules(df: DataFrame, basket: String, item: String,
             minSupport: Long): DataFrame = {
     require(minSupport >= 1, "minSupport must be >= 1")
-    val bi = distinctBi(df, basket, item).localCheckpoint()
+    val bi = Stored.now(distinctBi(df, basket, item))
     val itemSup = bi.groupBy(col("_i")).agg(count(lit(1)).as("_sup"))
-    // pairs feeds BOTH union branches below; without its own checkpoint
-    // the within-basket self-join + aggregate (the dominant cost) executes
-    // once per branch — the bi checkpoint alone does not stop that. The
+    // pairs feeds BOTH union branches below; without its own store the
+    // within-basket self-join + aggregate (the dominant cost) executes
+    // once per branch — storing bi alone does not stop that. The
     // pair table itself is small (frequent pairs only), so materializing
     // it is cheap.
-    val pairs = pairsOf(bi, minSupport).localCheckpoint()
+    val pairs = Stored.now(pairsOf(bi, minSupport))
     val dirs = pairs.select(col("item_a").as("lhs"), col("item_b").as("rhs"), col("support"))
       .unionAll(pairs.select(col("item_b").as("lhs"), col("item_a").as("rhs"), col("support")))
     dirs.join(itemSup.withColumnRenamed("_i", "lhs"), Seq("lhs"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,10 +47,8 @@ object BigramLm {
     // feeds both the context rollup and the join — persist both so the
     // shingle explode and aggregates run once (the final sort's sampling
     // pass re-executes consumers a second time otherwise)
-    val bf = bigrams.groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("bf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vocab = bf.groupBy(col("bg")).agg(sum(col("bf")).as("c2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bf = Stored.cached(bigrams.groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("bf")))
+    val vocab = Stored.cached(bf.groupBy(col("bg")).agg(sum(col("bf")).as("c2")))
     val ctx = vocab
       .groupBy(substring_index(col("bg"), " ", 1).as("w1"))
       .agg(sum(col("c2")).as("c1"))
@@ -68,9 +67,8 @@ object BigramLm {
     // left join keeps sub-2-token documents (null score) so the output is
     // total over the input corpus; persist before the sort so its sampling
     // pass reads the cache instead of re-scoring
-    df.select(col(idCol))
-      .join(per, Seq(idCol), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Stored.cached(df.select(col(idCol))
+      .join(per, Seq(idCol), "left"))
       .orderBy(col(idCol))
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -35,20 +36,18 @@ object BitextMine {
   def mine(df: DataFrame, idCol: String, vecCol: String, sideA: Column,
            minCos: Double, minMargin: Double,
            bucket: Column = lit(0)): DataFrame = {
-    val v = df.select(col(idCol).as("_id"), sideA.as("_sa"),
+    val v = Stored.cached(df.select(col(idCol).as("_id"), sideA.as("_sa"),
         col(vecCol).as("_raw"), gf.l2Norm(col(vecCol)).as("_n"),
         bucket.as("_bkt"))
       .where(col("_n") > 0)
       .repartition(col("_bkt"))
       .select(col("_id"), col("_sa"), col("_bkt"),
-        transform(col("_raw"), x => x.cast("double") / col("_n")).as("_v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        transform(col("_raw"), x => x.cast("double") / col("_n")).as("_v")))
     val a = v.where(col("_sa")).select(col("_bkt"), col("_id").as("_ida"), col("_v").as("_va"))
     val b = v.where(!col("_sa")).select(col("_bkt"), col("_id").as("_idb"), col("_v").as("_vb"))
-    val pairs = a.join(b, Seq("_bkt"))
+    val pairs = Stored.cached(a.join(b, Seq("_bkt"))
       .select(col("_ida"), col("_idb"),
-        gf.dotProduct(col("_va"), col("_vb")).as("_cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        gf.dotProduct(col("_va"), col("_vb")).as("_cos")))
 
     def top2(partCol: String, otherCol: String) = pairs
       .withColumn("_rk", row_number().over(
@@ -62,7 +61,7 @@ object BitextMine {
     val bestB = top2("_idb", "_ida").where(col("_rk") === 1)
       .select(col("_idb"), col("_ida").as("_back"))
 
-    val verified = best1
+    val verified = Stored.cached(best1
       .join(best2, Seq("_ida"), "left")
       .join(bestB, Seq("_idb"))
       .where(col("_back") === col("_ida"))                 // mutual best
@@ -70,8 +69,7 @@ object BitextMine {
       .select(col("_ida").as("id_a"), col("_idb").as("id_b"),
         graft.functions.gf.roundHalfUp(col("_cos"), 6).as("cosine"),
         when(col("_cos2") > 0, graft.functions.gf.roundHalfUp(col("_cos") / col("_cos2"), 6)).as("margin"))
-      .where(col("margin").isNull || col("margin") >= minMargin)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(col("margin").isNull || col("margin") >= minMargin))
     verified.orderBy(col("id_a"))
   }
 }

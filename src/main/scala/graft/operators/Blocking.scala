@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,9 +30,8 @@ object Blocking {
                          window: Int): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
     val keyed = df.select(col(id).as("_id"), key.as("_key"))
-    val ranked = Packing.globalRank(keyed, Seq(col("_key")), "_id", "rank0")
-      .select(col("_id"), col("_key"), col("rank0"))
-      .localCheckpoint(false)
+    val ranked = Stored.once(Packing.globalRank(keyed, Seq(col("_key")), "_id", "rank0")
+      .select(col("_id"), col("_key"), col("rank0")))
     (1 to window).map { d =>
       ranked.as("x").join(ranked.as("y"),
           col("x.rank0") + d === col("y.rank0"))

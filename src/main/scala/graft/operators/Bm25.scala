@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -70,16 +71,14 @@ object Bm25 {
     val stats = base.agg(count(lit(1)).cast("double").as("_n"),
       sum(col("_dl")).cast("double").as("_sumdl"))
     val dterms = terms.select(col(termCol).as("_t")).distinct()
-    // lazy checkpoint: tf feeds BOTH the per-term df rollup and the score
-    // join — without it each reference re-tokenizes the whole corpus
-    // (the multi-referenced-frame rule; checkpointed frame is sparse:
-    // one row per matching (doc, term), not per token)
-    val tf = base
+    // tf feeds BOTH the per-term df rollup and the score join — without
+    // the store each reference re-tokenizes the whole corpus (the stored
+    // frame is sparse: one row per matching (doc, term), not per token)
+    val tf = Stored.once(base
       .select(col(id), col("_dl"), explode(col("_toks")).as("_t"))
       .join(broadcast(dterms), "_t")
       .groupBy(col(id), col("_dl"), col("_t"))
-      .agg(count(lit(1)).cast("double").as("_tf"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).cast("double").as("_tf")))
     val dfT = tf.groupBy(col("_t")).agg(count(lit(1)).cast("double").as("_df"))
     val n = col("_n")
     val avgdl = col("_sumdl") / n

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,11 +36,10 @@ object Calibration {
                    outCol: String = "pctl"): DataFrame = {
     val parts = df.sparkSession.sparkContext.defaultParallelism
     val ord = Seq(col(group), order, col(unique))
-    val staged = df
+    val staged = Stored.now(df
       .repartitionByRange(parts, ord: _*)
       .sortWithinPartitions(ord: _*)
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint() // one materialization — see Packing's scaladoc
+      .withColumn("_pid", spark_partition_id()))
     // per-(partition, group) counts: tiny, so windows over it are safe
     val cnt = staged.groupBy(col("_pid").as("_opid"), col(group).as("_grp"))
       .agg(count(lit(1)).as("_c"))

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /**
  * Edit-distance similarity join (Levenshtein ≤ k) with PassJoin-style
@@ -62,12 +62,10 @@ object EditJoin {
            idCol: String, strCol: String, k: Int,
            maxSegFreq: Long = 0L): DataFrame = {
     require(k >= 0, s"need k >= 0, got $k")
-    val l = left.select(col(idCol).as("_ida"), col(strCol).as("_sa"),
-      length(col(strCol)).as("_la")).where(col("_sa").isNotNull)
-      .persist(MEMORY_AND_DISK)
-    val r = right.select(col(idCol).as("_idb"), col(strCol).as("_sb"),
-      length(col(strCol)).as("_lb")).where(col("_sb").isNotNull)
-      .persist(MEMORY_AND_DISK)
+    val l = Stored.cached(left.select(col(idCol).as("_ida"), col(strCol).as("_sa"),
+      length(col(strCol)).as("_la")).where(col("_sa").isNotNull))
+    val r = Stored.cached(right.select(col(idCol).as("_idb"), col(strCol).as("_sb"),
+      length(col(strCol)).as("_lb")).where(col("_sb").isNotNull))
 
     // segment i of a length-L string: even split, remainder spread over
     // the FIRST (L % (k+1)) segments — any fixed convention works as long
@@ -208,14 +206,13 @@ object EditJoin {
     val bcastRows = 4L << 20
     val lv = if (l.count() <= bcastRows) broadcast(l) else l
     val rv = if (r.count() <= bcastRows) broadcast(r) else r
-    val verified = cands
+    // output-sized store so the final sort's range-sampling pass does
+    // not re-execute the candidate+verify chain (FuzzyJoin pattern)
+    val verified = Stored.cached(cands
       .join(lv, "_ida").join(rv, "_idb")
       .select(col("_ida").as("id_a"), col("_idb").as("id_b"),
         levenshtein(col("_sa"), col("_sb")).cast("long").as("dist"))
-      .where(col("dist") <= k)
-      // output-sized persist so the final sort's range-sampling pass does
-      // not re-execute the candidate+verify chain (FuzzyJoin pattern)
-      .persist(MEMORY_AND_DISK)
+      .where(col("dist") <= k))
     verified.orderBy(col("id_a"), col("id_b"))
   }
 }

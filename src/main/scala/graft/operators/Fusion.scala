@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -24,20 +25,17 @@ import org.apache.spark.sql.functions._
  * score) pairs — never document text — plus a bounded per-partition-counts
  * collect; the fusion itself is an id-keyed outer join of the rank tables.
  *
- * Each ranking is projected to (id, score) and localCheckpoint'd BEFORE
- * ranking: globalRank's repartitionByRange evaluates its child TWICE
- * (once for the RangePartitioner's reservoir sample, once for the
- * exchange), and a ranking's scoring plan is typically the expensive part
+ * Each ranking is projected to (id, score) and stored BEFORE ranking:
+ * globalRank's repartitionByRange evaluates its child TWICE (once for the
+ * RangePartitioner's reservoir sample, once for the exchange), and a ranking's scoring plan is typically the expensive part
  * (BM25 tokenizes the corpus, cosine folds over every embedding). The
- * checkpoint runs that plan exactly once and both evaluations read the
+ * stored copy runs that plan exactly once and both evaluations read the
  * narrow two-column blocks — measured 3.2× on the sf0.1 hybrid-retrieval
  * gate (q_rrf_fusion 9.2 s -> 2.8 s one-shot at its bench position).
- * The per-ranking (id, score) checkpoints are LAZY (eager = false) so the
- * projection itself adds no construction-time jobs. NOTE: constructing the
- * fused frame is still NOT free — globalRank's two-phase rank collects
- * per-partition counts at construction (Packing.scala rankedStage), which
- * materializes each checkpointed ranking once. Callers building rrf frames
- * speculatively should construct lazily themselves.
+ * NOTE: constructing the fused frame is NOT free — globalRank's two-phase
+ * rank collects per-partition counts at construction (Packing.scala
+ * rankedStage), which fills each stored ranking once. Callers building
+ * rrf frames speculatively should construct lazily themselves.
  */
 object Fusion {
 
@@ -71,7 +69,7 @@ object Fusion {
     require(k >= 0, s"rrf k must be non-negative, got $k")
     val ranked = rankings.zipWithIndex.map { case (r, i) =>
       Packing.globalRank(
-          r.select(col(id), col(score).as("_s")).localCheckpoint(eager = false),
+          Stored.once(r.select(col(id), col(score).as("_s"))),
           Seq(col("_s").desc), id, s"_r$i")
         .select(col(id), (lit(1.0) / (lit(k.toDouble) + col(s"_r$i") + lit(1.0)))
           .as(s"_rrf$i"))

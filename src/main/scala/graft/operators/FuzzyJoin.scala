@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,23 +54,20 @@ object FuzzyJoin {
     // ranking drops them at its freq equi-join while array_intersect at
     // verify would count them — a pair whose overlap includes null would
     // break the prefix filter's recall guarantee
-    val l = left.select(col(idCol).as("_ida"),
+    val l = Stored.cached(left.select(col(idCol).as("_ida"),
       array_distinct(array_compact(col(setCol))).as("_ta"))
-      .where(size(col("_ta")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val r = right.select(col(idCol).as("_idb"),
+      .where(size(col("_ta")) > 0))
+    val r = Stored.cached(right.select(col(idCol).as("_idb"),
       array_distinct(array_compact(col(setCol))).as("_tb"))
-      .where(size(col("_tb")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(size(col("_tb")) > 0))
 
     // one global rare-first total order (freq, token) over BOTH sides'
     // per-record sets; ties broken by the token string so it is total
-    val freq = l.select(explode(col("_ta")).as("t"))
+    // vocab-sized (distinct tokens, not records) and consumed by BOTH
+    // prefix rankings — stored so the double-explode scan runs once
+    val freq = Stored.cached(l.select(explode(col("_ta")).as("t"))
       .unionAll(r.select(explode(col("_tb")).as("t")))
-      .groupBy(col("t")).agg(count(lit(1)).as("f"))
-      // vocab-sized (distinct tokens, not records) and consumed by BOTH
-      // prefix rankings — persist so the double-explode scan runs once
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("t")).agg(count(lit(1)).as("f")))
 
     // prefix tokens of one side: rank the record's tokens rare-first,
     // keep the first n - ceil(tau*n) + 1
@@ -108,19 +106,18 @@ object FuzzyJoin {
     val bcastRows = 4L << 20
     val lv = if (l.count() <= bcastRows) broadcast(l) else l
     val rv = if (r.count() <= bcastRows) broadcast(r) else r
-    val verified = cands
+    // output-sized store: without it the final sort's range-sampling
+    // pass re-executes the ENTIRE candidate+verify chain a second time
+    // (measured 4.2 -> 0.7 s at sf0.1); the verified pair set is the
+    // smallest relation in the whole job, so this is the cheapest point
+    // to cut the double execution
+    val verified = Stored.cached(cands
       .join(lv, "_ida")
       .join(rv, "_idb")
       .select(col("_ida").as("id_a"), col("_idb").as("id_b"),
         inter.cast("long").as("inter"), uni.cast("long").as("uni"))
       .where(col("inter") * den >= col("uni") * num)
-      .withColumn("jac", graft.functions.gf.roundHalfUp(col("inter").cast("double") / col("uni"), 6))
-      // output-sized persist: without it the final sort's range-sampling
-      // pass re-executes the ENTIRE candidate+verify chain a second time
-      // (measured 4.2 -> 0.7 s at sf0.1); the verified pair set is the
-      // smallest relation in the whole job, so this is the cheapest point
-      // to cut the double execution
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("jac", graft.functions.gf.roundHalfUp(col("inter").cast("double") / col("uni"), 6)))
     verified.orderBy(col("id_a"), col("id_b"))
   }
 }

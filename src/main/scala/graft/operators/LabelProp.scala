@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,7 +24,7 @@ import org.apache.spark.sql.functions._
  * 100 TB shape: per round ONE equi-join of the current label table
  * against the symmetrized edge list plus a map-side-combined min
  * aggregate; the label table is node-bounded, never edge-bounded.
- * localCheckpoint per round keeps the plan flat (the PageRank/kCore
+ * Storing the labels each round keeps the plan flat (the PageRank/kCore
  * lesson — without it round N's plan embeds rounds 1..N-1 three times
  * over). Rounds are the caller's hop budget, not a convergence loop.
  */
@@ -36,19 +37,17 @@ object LabelProp {
                 id: String, label: String, rounds: Int): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
     val e = edges.select(col(src).cast("long").as("_s"), col(dst).cast("long").as("_d"))
-    val sym = e.unionAll(e.select(col("_d").as("_s"), col("_s").as("_d")))
-      .where(col("_s") =!= col("_d")).distinct().localCheckpoint(false)
-    var labels = seeds
+    val sym = Stored.once(e.unionAll(e.select(col("_d").as("_s"), col("_s").as("_d")))
+      .where(col("_s") =!= col("_d")).distinct())
+    var labels = Stored.once(seeds
       .select(col(id).cast("long").as("_v"), col(label).cast("long").as("_l"))
-      .groupBy(col("_v")).agg(min(col("_l")).as("_l"))
-      .localCheckpoint(false)
+      .groupBy(col("_v")).agg(min(col("_l")).as("_l")))
     var i = 0
     while (i < rounds) {
       val spread = labels.join(sym, labels("_v") === sym("_s"))
         .select(col("_d").as("_v"), col("_l"))
-      labels = labels.unionAll(spread)
-        .groupBy(col("_v")).agg(min(col("_l")).as("_l"))
-        .localCheckpoint(false)
+      labels = Stored.once(labels.unionAll(spread)
+        .groupBy(col("_v")).agg(min(col("_l")).as("_l")))
       i += 1
     }
     labels.select(col("_v").as("node"), col("_l").as("label"))

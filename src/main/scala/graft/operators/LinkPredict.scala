@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /**
  * Link prediction over an undirected graph — the classic neighborhood
@@ -25,13 +25,10 @@ object LinkPredict {
   /** Scores for distance-2 non-edges: (a, b, cn, pa, jaccard), a < b,
     * id-ordered. `edges` must be canonical undirected pairs (a < b). */
   def scores(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val e = edges.select(col(aCol).as("_a"), col(bCol).as("_b"))
-      .persist(MEMORY_AND_DISK)
-    val und = e.select(col("_a").as("_s"), col("_b").as("_d"))
-      .unionAll(e.select(col("_b").as("_s"), col("_a").as("_d")))
-      .persist(MEMORY_AND_DISK)
-    val deg = und.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
-      .persist(MEMORY_AND_DISK)
+    val e = Stored.cached(edges.select(col(aCol).as("_a"), col(bCol).as("_b")))
+    val und = Stored.cached(e.select(col("_a").as("_s"), col("_b").as("_d"))
+      .unionAll(e.select(col("_b").as("_s"), col("_a").as("_d"))))
+    val deg = Stored.cached(und.groupBy(col("_s")).agg(count(lit(1)).as("_deg")))
 
     // (a, b) at distance 2 with the middle-vertex count = |Γ(a) ∩ Γ(b)|
     val two = und.as("x").join(und.as("y"),
@@ -40,14 +37,13 @@ object LinkPredict {
       .agg(count(lit(1)).as("cn"))
     val nonEdges = two.join(e, Seq("_a", "_b"), "left_anti")
 
-    val verified = nonEdges
+    val verified = Stored.cached(nonEdges
       .join(deg.select(col("_s").as("_a"), col("_deg").as("_da")), "_a")
       .join(deg.select(col("_s").as("_b"), col("_deg").as("_db")), "_b")
       .select(col("_a").as("a"), col("_b").as("b"), col("cn"),
         (col("_da") * col("_db")).as("pa"),
         round(col("cn").cast("double") /
-          (col("_da") + col("_db") - col("cn")), 6).as("jaccard"))
-      .persist(MEMORY_AND_DISK)
+          (col("_da") + col("_db") - col("cn")), 6).as("jaccard")))
     verified.orderBy(col("a"), col("b"))
   }
 }

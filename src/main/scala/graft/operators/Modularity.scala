@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,11 +26,9 @@ object Modularity {
     * q_num) with q_num = 4·m·e_c − d_c² as decimal(38,0), label-ordered. */
   def of(edges: DataFrame, aCol: String, bCol: String,
          labels: DataFrame, nodeCol: String, labelCol: String): DataFrame = {
-    val e = edges.select(col(aCol).as("_a"), col(bCol).as("_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = Stored.cached(edges.select(col(aCol).as("_a"), col(bCol).as("_b")))
     val m = e.count()
-    val lab = labels.select(col(nodeCol).as("_v"), col(labelCol).as("_l"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lab = Stored.cached(labels.select(col(nodeCol).as("_v"), col(labelCol).as("_l")))
 
     val labeled = e
       .join(lab.select(col("_v").as("_a"), col("_l").as("_la")), "_a")

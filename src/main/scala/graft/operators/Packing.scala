@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,22 +24,20 @@ import org.apache.spark.sql.functions._
  * the exclusive prefix offsets back, and finish with a partition-local
  * window. The corpus itself never funnels through one task.
  *
- * The staged (range-partitioned, pid-stamped) frame is materialized ONCE
- * via an eager localCheckpoint, and both the offsets job and the main job
- * read the SAME materialized blocks. This is load-bearing, not a cache
+ * The staged (range-partitioned, pid-stamped) frame is stored ONCE
+ * (`Stored.now`), and both the offsets job and the main job read the
+ * SAME stored blocks. This is load-bearing, not a cache
  * optimization: RangePartitioner's bounds come from reservoir samples of
  * the child's row order, and when the input's lineage contains a shuffle,
  * row order differs between two executions — two separate plans could
  * assign DIFFERENT pids to boundary rows and the broadcast offsets would
- * silently misalign. (An earlier persist() version leaked the cache entry
- * per call; checkpoint blocks are dropped by the ContextCleaner when the
- * frame is garbage collected.) The order key must be unique — pass the
+ * silently misalign. The order key must be unique — pass the
  * doc id, or append one, as rankBins does.
  */
 object Packing {
 
   /** Exclusive per-partition offsets of sum(weight) over the staged frame
-    * (keyed by the checkpoint's physical partition index). */
+    * (keyed by the stored frame's physical partition index). */
   private def prefixOffsets(staged: DataFrame): Map[Int, Long] = {
     val sums = staged.groupBy(spark_partition_id().as("_pid"))
       .agg(sum(col("_w")).as("_s"))
@@ -122,27 +120,23 @@ object Packing {
    * chunks — exactly what a pretraining loader does.
    *
    * The input is read once: the range partitioner's bound-sampling job
-   * fills a lazy `localCheckpoint(false)` of `df`, and the staging
-   * checkpoint job reads those rows instead of re-running the upstream
-   * plan. Once the staged rows are stored, the input copy is released at
-   * once rather than at the driver's next GC, so the step holds one stored
-   * copy of the corpus at the end, not two.
+   * fills a stored copy of `df` (`Stored.once`), and the staging job reads
+   * those rows instead of re-running the upstream plan. The input copy is
+   * stored in a scope of its own, released as soon as the staged rows are
+   * stored, so the step holds one stored copy of the corpus at the end,
+   * not two.
    */
   def packSequences(df: DataFrame, order: String, tokenCol: Column,
                     contextLen: Int): DataFrame = {
     require(contextLen > 0, "contextLen must be positive")
     val parts = df.sparkSession.sparkContext.defaultParallelism
-    val in = df.localCheckpoint(false)
-    val staged = in
-      .repartitionByRange(parts, col(order))
-      .sortWithinPartitions(col(order))
-      // null token count = empty doc (0 tokens), not a null-poisoned span
-      .withColumn("_w", coalesce(tokenCol.cast("long"), lit(0L)))
-      .localCheckpoint()
-    // staged holds every row now: drop the input copy, not at the next GC
-    in.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
+    // the scope drops the input copy as soon as staged holds every row
+    val staged = Stored.scoped {
+      Stored.now(Stored.once(df)
+        .repartitionByRange(parts, col(order))
+        .sortWithinPartitions(col(order))
+        // null token count = empty doc (0 tokens), not a null-poisoned span
+        .withColumn("_w", coalesce(tokenCol.cast("long"), lit(0L))))
     }
     // zero-shuffle finish: in-partition fold seeded by the broadcast
     // offsets (see withRunningTotal) — no pid re-shuffle, no window
@@ -320,12 +314,9 @@ object Packing {
                           unique: String): (DataFrame, Long) = {
     val parts = df.sparkSession.sparkContext.defaultParallelism
     val ord = order :+ col(unique)
-    // one materialization, shared by the counts job and the main job (see
-    // the object scaladoc: separate plans could range-partition differently)
-    val staged = df
+    val staged = Stored.now(df
       .repartitionByRange(parts, ord: _*)
-      .sortWithinPartitions(ord: _*)
-      .localCheckpoint()
+      .sortWithinPartitions(ord: _*))
     val counts = staged.groupBy(spark_partition_id().as("_pid"))
       .agg(count(lit(1)).as("_c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -335,7 +326,7 @@ object Packing {
     // zero-shuffle finish (see withRunningTotal): partition offset plus
     // in-partition position IS the 0-based global rank — no pid re-shuffle,
     // no window, and (r21) no materialized weight-1 column in the
-    // checkpoint (8 bytes/row fewer stored and folded)
+    // stored frame (8 bytes/row fewer stored and folded)
     (withPartitionRank(staged, "_rank0", excl), n)
   }
 }

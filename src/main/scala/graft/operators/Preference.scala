@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -48,21 +49,20 @@ object Preference {
     * Output: (id string, n_wins, n_pairs, score_micros), id-ordered. */
   def bradleyTerry(pairs: DataFrame, winner: String, loser: String,
                    iters: Int = 3): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val p0 = pairs
       .select(col(winner).cast("string").as("w"), col(loser).cast("string").as("l"))
       .where(col("w").isNotNull && col("l").isNotNull && col("w") =!= col("l"))
-    // participation edges: each pair feeds BOTH endpoints' denominator
-    val edges = p0.select(col("w").as("id"), col("w").as("a"), col("l").as("b"))
-      .unionAll(p0.select(col("l").as("id"), col("w").as("a"), col("l").as("b")))
-      .persist(lvl)
-    val base = edges.groupBy(col("id"))
-      .agg(sum(when(col("id") === col("a"), 1L).otherwise(0L)).as("n_wins"),
-        count(lit(1)).as("n_pairs"))
-      .persist(lvl)
+    // the scope releases edges, base and every round's scores once the
+    // result is stored; the result outlives it
+    val ranked = Stored.scoped {
+      // participation edges: each pair feeds BOTH endpoints' denominator
+      val edges = Stored.cached(p0.select(col("w").as("id"), col("w").as("a"), col("l").as("b"))
+        .unionAll(p0.select(col("l").as("id"), col("w").as("a"), col("l").as("b"))))
+      val base = Stored.cached(edges.groupBy(col("id"))
+        .agg(sum(when(col("id") === col("a"), 1L).otherwise(0L)).as("n_wins"),
+          count(lit(1)).as("n_pairs")))
 
-    var scores = base.select(col("id"), lit(Unit6).as("p"))
-    try {
+      var scores = base.select(col("id"), lit(Unit6).as("p"))
       for (_ <- 0 until iters) {
         val den = edges
           .join(scores.select(col("id").as("a"), col("p").as("pa")), Seq("a"))
@@ -70,10 +70,10 @@ object Preference {
           .groupBy(col("id"))
           .agg(sum(floor(lit(Num) / (col("pa") + col("pb")))).as("den"))
         // each round references the previous scores THREE times (both join
-        // sides of den + p_prev) — without a per-round checkpoint the plan
+        // sides of den + p_prev) — without a per-round store the plan
         // tree grows 3^iters and re-executes every prior round per reference
         // (the PageRank pattern, PageRank.scala:28)
-        scores = base
+        scores = Stored.once(base
           .join(den, Seq("id"))
           .join(scores.select(col("id"), col("p").as("p_prev")), Seq("id"))
           .select(col("id"),
@@ -84,22 +84,12 @@ object Preference {
               // floor drifts once the numerator passes 2^52 (n_wins ≳ 4.5e3)
               expr(s"CAST(n_wins + 1 AS DECIMAL(24,0)) * $Num" +
                 s" DIV (den + ($Num DIV (p_prev + $Unit6)))"),
-              lit(PMin)), lit(PMax)).as("p"))
-          .localCheckpoint(false)
+              lit(PMin)), lit(PMax)).as("p")))
       }
-      // eager cut BEFORE unpersisting: the caller's frame must not recompute
-      // edges/base after they are dropped (the lazy per-round checkpoints
-      // materialize under this one action); orderBy stays lazy on top
-      base.join(scores, Seq("id"))
+      Stored.now(base.join(scores, Seq("id"))
         .select(col("id"), col("n_wins"), col("n_pairs"),
-          col("p").cast("long").as("score_micros"))
-        .localCheckpoint()
-        .orderBy(col("id"))
-    } finally {
-      // library callers don't run inside the bench harness's global
-      // persistent-RDD sweep — leaking these would hold executor storage
-      // per call (the Privacy.scala try/finally pattern)
-      edges.unpersist(false); base.unpersist(false); ()
+          col("p").cast("long").as("score_micros")))
     }
+    ranked.orderBy(col("id"))
   }
 }

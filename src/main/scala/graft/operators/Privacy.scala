@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -39,11 +40,9 @@ object Privacy {
                  otherQi: Seq[Column], k: Long): DataFrame = {
     require(ladder.nonEmpty, "need at least one generalization level")
     require(k >= 1, "k must be at least 1")
-    val freq = freqFrame(df, Seq(ladder), otherQi)
-    val chosen =
-      try firstQualifying(freq, ladder.indices.map(Seq(_)), otherQi.size, k)
-        .map(ladder)
-      finally { freq.unpersist(false); () }
+    val chosen = Stored.scoped(
+      firstQualifying(freqFrame(df, Seq(ladder), otherQi), ladder.indices.map(Seq(_)), otherQi.size, k))
+      .map(ladder)
     val (name, qiCol) = chosen.getOrElse(ladder.last)
     val gen = df.withColumn("qi", qiCol).withColumn("gen_level", lit(name))
     if (chosen.isDefined) gen
@@ -97,11 +96,9 @@ object Privacy {
     require(ladders.nonEmpty && ladders.forall(_.nonEmpty),
       "each quasi-identifier needs a non-empty ladder")
     require(k >= 1, "k must be at least 1")
-    val freq = freqFrame(df, ladders, otherQi)
     val nodes = lattice(ladders.map(_.length))
-    val chosen =
-      try firstQualifying(freq, nodes, otherQi.size, k).map(nodes)
-      finally { freq.unpersist(false); () }
+    val chosen = Stored.scoped(
+      firstQualifying(freqFrame(df, ladders, otherQi), nodes, otherQi.size, k)).map(nodes)
     val node = chosen.getOrElse(nodes.last)
     val gen0 = node.zip(ladders).zipWithIndex.foldLeft(df) {
       case (d, ((lvl, lad), i)) => d.withColumn(s"qi$i", lad(lvl)._2)
@@ -196,8 +193,7 @@ object Privacy {
     val base = df.where(sensitive.isNotNull)
       .select(qi.zipWithIndex.map { case (c, i) => c.as(s"qi$i") } :+
         sensitive.as("_sv"): _*)
-    val glob = base.groupBy(col("_sv")).agg(count(lit(1)).as("_g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val glob = Stored.cached(base.groupBy(col("_sv")).agg(count(lit(1)).as("_g")))
     // one-row (N, m) rollup, broadcast-crossed into every downstream row
     val tot = glob.agg(coalesce(sum(col("_g")), lit(0L)).as("_totn"),
       count(lit(1)).as("_totm"))
@@ -278,8 +274,7 @@ object Privacy {
       ladders.zipWithIndex.flatMap { case (lad, i) =>
         lad.zipWithIndex.map { case ((_, c), l) => c.as(s"_l${i}_$l") }
       } ++ otherQi.zipWithIndex.map { case (c, i) => c.as(s"_oq$i") }
-    df.groupBy(cols: _*).agg(count(lit(1)).as("_cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Stored.cached(df.groupBy(cols: _*).agg(count(lit(1)).as("_cnt")))
   }
 
   /** First lattice node (in walk order) whose minimum group size reaches k,

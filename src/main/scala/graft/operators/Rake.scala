@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,14 +37,13 @@ object Rake {
     val marked = toks.withColumn("_stop", col("_w").isin(stopwords.map(lit): _*))
       .withColumn("_grp", sum(col("_stop").cast("int")).over(
         Window.partitionBy(col(idCol)).orderBy(col("_pos"))))
-    val phrases = marked.where(!col("_stop"))
+    val phrases = Stored.cached(marked.where(!col("_stop"))
       .groupBy(col(idCol), col("_grp"))
       .agg(array_join(transform(
           sort_array(collect_list(struct(col("_pos"), col("_w")))),
           s => s("_w")), " ").as("phrase"),
         count(lit(1)).as("n_words"))
-      .where(col("n_words") <= maxPhraseLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(col("n_words") <= maxPhraseLen))
 
     val phraseWords = phrases.select(col(idCol), col("_grp"), col("n_words"),
       explode(split(col("phrase"), " ")).as("_w"))
@@ -62,11 +62,10 @@ object Rake {
       .select(col(idCol), col("phrase"), col("n_words"),
         col("phrase_deg"), col("phrase_freq"),
         graft.functions.gf.roundHalfUp(col("phrase_deg").cast("double") / col("phrase_freq"), 6).as("score"))
-    scored
-      // output-sized persist: the final sort's range-sampling pass would
-      // otherwise re-execute the stats join + double rollup (FuzzyJoin
-      // pattern; ~0.3s of the gate at sf0.1)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // output-sized store: the final sort's range-sampling pass would
+    // otherwise re-execute the stats join + double rollup (FuzzyJoin
+    // pattern; ~0.3s of the gate at sf0.1)
+    Stored.cached(scored)
       .withColumn("rank", row_number().over(
         Window.partitionBy(col(idCol))
           .orderBy(col("score").desc, col("phrase"))))

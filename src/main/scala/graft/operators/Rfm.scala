@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -28,11 +29,10 @@ object Rfm {
     * reference instant in the same unit; `valueCents` integer money. */
   def scores(df: DataFrame, entityCol: String, ts: Column,
              valueCents: Column, asOf: Long, nBins: Int = 5): DataFrame = {
-    val base = df.groupBy(col(entityCol).as("entity"))
+    val base = Stored.cached(df.groupBy(col(entityCol).as("entity"))
       .agg((lit(asOf) - max(ts)).as("recency"),
         count(lit(1)).as("frequency"),
-        sum(valueCents).as("monetary_cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(valueCents).as("monetary_cents")))
     val scored = Seq[(Column, String)](
       (col("recency").desc, "r_score"),
       (col("frequency"), "f_score"),

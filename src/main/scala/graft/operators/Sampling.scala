@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -38,12 +39,12 @@ object Sampling {
     * non-null stratum, keyed by the stratum cast to string (stratum-sized:
     * languages/sources number in the dozens, not the corpus scale). Strata
     * whose aggregate is null are skipped. `df` is read once: the collect
-    * fills a lazy `localCheckpoint(false)` of it, and the mixture's filter
+    * fills a stored copy of it, and the mixture's filter
     * reads those rows (the returned frame) instead of re-running the input
     * plan. */
   private def strataTotals(df: DataFrame, stratum: String,
                            agg: Column): (DataFrame, Map[String, Long]) = {
-    val in = df.localCheckpoint(false)
+    val in = Stored.once(df)
     val totals = in.groupBy(col(stratum).cast("string").as("_s"))
       .agg(agg.as("_t"))
       .collect().collect {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -170,9 +171,8 @@ object Stats {
     val hist = base.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
     // value-phase order: one range exchange on (_g, _v); the frame is read
     // three times (rank metadata, rank emit, deviation derivation)
-    val ranged = hist.repartitionByRange(col("_g"), col("_v"))
-      .sortWithinPartitions(col("_g"), col("_v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranged = Stored.cached(hist.repartitionByRange(col("_g"), col("_v"))
+      .sortWithinPartitions(col("_g"), col("_v")))
     // med2 is group-sized and referenced twice, but (r21) it is now a
     // driver-local one-partition relation — already a leaf, nothing to
     // re-scan, no checkpoint needed
@@ -188,9 +188,8 @@ object Stats {
     // keys contiguous, which the range partitioner guarantees.
     val dev = ranged.join(broadcast(med2), Seq("_g"))
       .select(col("_g"), abs(col("_v") * 2 - col("med2")).as("_d"), col("_c"))
-    val devRanged = dev.repartitionByRange(col("_g"), col("_d"))
-      .sortWithinPartitions(col("_g"), col("_d"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val devRanged = Stored.cached(dev.repartitionByRange(col("_g"), col("_d"))
+      .sortWithinPartitions(col("_g"), col("_d")))
     val mad4 = twoMiddleSumSel(devRanged, "_d", "mad4")
     devRanged.join(broadcast(med2), Seq("_g")).join(broadcast(mad4), Seq("_g"))
       .groupBy(col("_g").as("group"))
@@ -347,10 +346,9 @@ object Stats {
     * (n, n_rows, n_cols, dof, chi2) with chi2 6dp. */
   def chiSquare(df: DataFrame, rowC: Column, colC: Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val cells = df.where(rowC.isNotNull && colC.isNotNull)
+    val cells = Stored.cached(df.where(rowC.isNotNull && colC.isNotNull)
       .groupBy(rowC.cast("string").as("_r"), colC.cast("string").as("_c"))
-      .agg(count(lit(1)).as("_o"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("_o")))
     val rt = cells.groupBy(col("_r")).agg(sum(col("_o")).as("_rt"))
     val ct = cells.groupBy(col("_c")).agg(sum(col("_o")).as("_ct"))
     val tot = cells.agg(sum(col("_o")).as("_n"),
@@ -395,14 +393,10 @@ object Stats {
                    (ranks0: Long => Seq[Long]): (Long, Map[Long, Long]) = {
     val spark = df.sparkSession
     val parts = spark.sparkContext.defaultParallelism
-    val hist = df.select(value.cast("long").as("_v")).where(col("_v").isNotNull)
+    val hist = Stored.now(df.select(value.cast("long").as("_v")).where(col("_v").isNotNull)
       .groupBy(col("_v")).agg(count(lit(1)).as("_c"))
       .repartitionByRange(parts, col("_v"))
-      .sortWithinPartitions(col("_v"))
-      // one materialization shared by the counts job and the walk (the
-      // Packing rule: two plans could range-partition boundary rows
-      // differently and the offsets would misalign)
-      .localCheckpoint()
+      .sortWithinPartitions(col("_v")))
     val pc = hist.groupBy(spark_partition_id().as("_pid")).agg(sum(col("_c")).as("_n"))
       .collect().collect { case r if !r.isNullAt(1) => r.getInt(0) -> r.getLong(1) }.toMap
     val n = pc.values.sum
@@ -449,9 +443,8 @@ object Stats {
     // self-join materializing full cumulative columns that were only ever
     // MAX-reduced). Same integer math, same long-overflow envelope.
     val parts = spark.sparkContext.defaultParallelism
-    val ranged = g.repartitionByRange(parts, col("_v"))
-      .sortWithinPartitions(col("_v"))
-      .localCheckpoint() // one materialization shared by offsets + walk
+    val ranged = Stored.now(g.repartitionByRange(parts, col("_v"))
+      .sortWithinPartitions(col("_v")))
     val pc = ranged.groupBy(spark_partition_id().as("_pid"))
       .agg(sum(col("_a")).as("_sa"), sum(col("_b")).as("_sb"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap

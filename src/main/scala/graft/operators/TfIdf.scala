@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,7 +14,7 @@ import graft.functions.gf
  * IDF weighting is part of our training-data surface, SURVEY §2.12).
  *
  * Scale shape: ONE corpus scan — the (doc, term) tf aggregate is
- * localCheckpoint'd once (the shared-subtree idiom from Packing/Basket:
+ * stored once (the shared-subtree idiom from Packing/Basket:
  * without it, column pruning specializes the tf subtree per consumer and
  * the scan+explode runs once per branch), then document frequency is
  * `tf.groupBy(term).count()` joined back on term, then the per-doc top-k
@@ -48,12 +49,8 @@ object TfIdf {
   def topTerms(df: DataFrame, id: String, text: String, k: Int): DataFrame = {
     val toks = df.select(col(id).as("_id"), explode(gf.tokens(col(text))).as("term"))
       .where(col("term") =!= "")
-    // lazy (eager = false): materializes on the FIRST action over the
-    // result, not at construction time — building the query must not run
-    // Spark jobs (library laziness contract); after that first action
-    // every consumer branch reads the cached two-column blocks
-    val tf = toks.groupBy(col("_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
+    // every consumer branch reads the stored two-column blocks
+    val tf = Stored.once(toks.groupBy(col("_id"), col("term")).agg(count(lit(1)).as("tf")))
     // tf has one row per (doc, term): counting tf rows per term IS df.
     // Aggregate + join, NOT a window — see the scaladoc's skew rationale.
     val dfc = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -90,8 +87,7 @@ object TfIdf {
   def classTopTerms(df: DataFrame, cls: String, text: String, k: Int): DataFrame = {
     val toks = df.select(col(cls).as("_cls"), explode(gf.tokens(col(text))).as("term"))
       .where(col("term") =!= "")
-    val tf = toks.groupBy(col("_cls"), col("term")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
+    val tf = Stored.once(toks.groupBy(col("_cls"), col("term")).agg(count(lit(1)).as("tf")))
     val ft = tf.groupBy(col("term")).agg(sum(col("tf")).as("ft"))
     val tot = tf.agg(sum(col("tf")).as("_tt"), countDistinct(col("_cls")).as("_nc"))
     val scored = tf.join(ft, Seq("term")).crossJoin(broadcast(tot))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -70,7 +71,7 @@ object Triangles {
     * and the upstream edge derivation can be an arbitrary pipeline. */
   private[graft] def oriented(edges: DataFrame, src: String, dst: String): DataFrame = {
     val e = canonical(edges, src, dst)
-    orientFrom(e, degrees(e)).localCheckpoint()
+    Stored.now(orientFrom(e, degrees(e)))
   }
 
   /** Per-vertex local clustering coefficient: closed wedges at v over
@@ -91,11 +92,9 @@ object Triangles {
     * and the final coefficient join. Round5Spec asserts the executed
     * plans carry no second degree aggregate. */
   def clusteringCoefficient(edges: DataFrame, src: String, dst: String): DataFrame = {
-    val e = canonical(edges, src, dst)
-      .localCheckpoint() // feeds the degree aggregate AND the orientation joins
-    val deg = degrees(e)
-      .localCheckpoint() // one row per vertex; reused by orientation (×2) + output join
-    val triPerVertex = enumerateOriented(orientFrom(e, deg).localCheckpoint())
+    val e = Stored.now(canonical(edges, src, dst))
+    val deg = Stored.now(degrees(e))
+    val triPerVertex = enumerateOriented(Stored.now(orientFrom(e, deg)))
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy(col("node"))
       .agg(org.apache.spark.sql.functions.count(lit(1)).as("n_triangles"))
@@ -120,7 +119,7 @@ object Triangles {
     *
     * 100 TB shape: per round one map-side-combined degree aggregate over
     * the current edge list plus two semi-joins against the (small,
-    * AQE-broadcast) keep set; edges are localCheckpoint'd each round so
+    * AQE-broadcast) keep set; edges are stored each round so
     * the plan stays flat instead of growing 3 joins deep per round. The
     * edge list only ever shrinks. */
   def kCore(edges: DataFrame, src: String, dst: String, k: Int, rounds: Int): DataFrame =
@@ -134,14 +133,13 @@ object Triangles {
     * node/degree view `kCore` returns. */
   def kCoreEdges(edges: DataFrame, src: String, dst: String, k: Int,
                  rounds: Int): DataFrame = {
-    var e = canonical(edges, src, dst).localCheckpoint(false)
+    var e = Stored.once(canonical(edges, src, dst))
     var i = 0
     while (i < rounds) {
       val keep = degrees(e).where(col("_d") >= k)
-      e = e.join(keep.select(col("_v").as("a")), Seq("a"), "left_semi")
+      e = Stored.once(e.join(keep.select(col("_v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("_v").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint(false)
+        .select(col("a"), col("b")))
       i += 1
     }
     e
@@ -168,7 +166,7 @@ object Triangles {
              rounds: Int): DataFrame = {
     require(k >= 2, "k-truss needs k >= 2")
     def support(e: DataFrame): DataFrame =
-      enumerateOriented(orientFrom(e, degrees(e)).localCheckpoint(false))
+      enumerateOriented(Stored.once(orientFrom(e, degrees(e))))
         .select(explode(array(
           struct(col("a").as("a"), col("b").as("b")),
           struct(col("a").as("a"), col("c").as("b")),
@@ -176,16 +174,15 @@ object Triangles {
         .select(col("_e.a").as("a"), col("_e.b").as("b"))
         .groupBy(col("a"), col("b"))
         .agg(org.apache.spark.sql.functions.count(lit(1)).as("support"))
-    var e = canonical(edges, src, dst).localCheckpoint(false)
+    var e = Stored.once(canonical(edges, src, dst))
     var i = 0
     while (i < rounds) {
       // left join, not semi: triangle-free edges are ABSENT from the
       // support frame and must still survive when k-2 == 0 (a 2-truss
       // retains every edge by definition)
-      e = e.join(support(e), Seq("a", "b"), "left")
+      e = Stored.once(e.join(support(e), Seq("a", "b"), "left")
         .where(coalesce(col("support"), lit(0L)) >= k - 2)
-        .select(col("a"), col("b"))
-        .localCheckpoint(false)
+        .select(col("a"), col("b")))
       i += 1
     }
     e.join(support(e), Seq("a", "b"), "left")

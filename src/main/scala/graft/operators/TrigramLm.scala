@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -64,22 +65,20 @@ object TrigramLm {
     // resolution — persist the vocab-sized tables and the doc-trigram
     // instances so each counting job runs once (the final sort's sampling
     // pass re-executes consumers a second time otherwise)
-    val tri = shingleCounts(train, 3, "c3").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bi = shingleCounts(train, 2, "cb").persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val uni = train
+    val tri = Stored.cached(shingleCounts(train, 3, "c3"))
+    val bi = Stored.cached(shingleCounts(train, 2, "cb"))
+    val uni = Stored.cached(train
       .select(explode(gf.tokens(col(textCol))).as("t"))
       .where(length(col("t")) > 0)
-      .groupBy(col("t")).agg(count(lit(1)).as("cu"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("t")).agg(count(lit(1)).as("cu")))
     val tot = uni.agg(sum(col("cu")).as("n_total"))
 
     // scoring instances, aggregated before any join
-    val inst = df
+    val inst = Stored.cached(df
       .select(col(idCol), explode(gf.wordShingles(col(textCol), 3)).as("tg"))
       .where(size(split(col("tg"), " ", -1)) === 3 && !col("tg").contains("  ")
         && col("tg") =!= "" && !col("tg").startsWith(" "))
-      .groupBy(col(idCol), col("tg")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col(idCol), col("tg")).agg(count(lit(1)).as("tf")))
 
     // backoff resolution at vocabulary granularity: one row per distinct
     // scored trigram, five left joins against the (small) count tables
@@ -117,9 +116,8 @@ object TrigramLm {
 
     // keep sub-3-token documents (null score) so output covers the corpus;
     // persist before the sort so its sampling pass reads the cache
-    df.select(col(idCol))
-      .join(per, Seq(idCol), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Stored.cached(df.select(col(idCol))
+      .join(per, Seq(idCol), "left"))
       .orderBy(col(idCol))
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Stored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,10 +47,8 @@ object UnigramLm {
     // join, and the final id-sort's range-sampling pass executes its
     // consumer chain a second time — persist the two shared tables so the
     // tokenize/explode/aggregate work runs once (MEMORY_AND_DISK spills)
-    val tf = toks.groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vocab = tf.groupBy(col("tok")).agg(sum(col("tf")).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tf = Stored.cached(toks.groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("tf")))
+    val vocab = Stored.cached(tf.groupBy(col("tok")).agg(sum(col("tf")).as("c")))
     val total = vocab.agg(sum(col("c")).as("n_total"))
 
     val bits = (length(bin(col("n_total"))) - length(bin(col("c")))).cast("long")
@@ -66,9 +65,8 @@ object UnigramLm {
     // left join keeps empty/whitespace-only documents (null score) so the
     // output is total over the input corpus; persist the per-doc result so
     // the sort's sampling pass reads the cache instead of re-scoring
-    df.select(col(idCol))
-      .join(per, Seq(idCol), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Stored.cached(df.select(col(idCol))
+      .join(per, Seq(idCol), "left"))
       .orderBy(col(idCol))
   }
 }

@@ -1,5 +1,6 @@
 package graft.plan
 
+import graft.Stored
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -127,7 +128,7 @@ final class QueryExecutor(spark: SparkSession, llm: LlmClient,
     // memoized as a LAZY DocSet — each consumer's Spark ACTION would
     // re-execute the whole subtree (LLM operators would bill twice, and a
     // nondeterministic LLM could make the consumers disagree within one
-    // answer), so such nodes get a lazy local checkpoint below
+    // answer), so such nodes are stored below
     val refCount: Map[Int, Int] = plan.nodes.values.flatMap(_.inputs).toSeq
       .groupBy(identity).map { case (id, xs) => id -> xs.size }
 
@@ -195,10 +196,9 @@ final class QueryExecutor(spark: SparkSession, llm: LlmClient,
             }
             QDocs(DocRead.materialized(spark, path))
           case (QDocs(ds), _) if refCount.getOrElse(id, 0) > 1 =>
-            // shared subtree: lazy local checkpoint so the consumers'
-            // separate actions compute it once (the repo-wide rule for
-            // multi-referenced frames; lazy — no eager job here)
-            QDocs(DocSet.wrap(ds.ds.localCheckpoint(false)))
+            // shared subtree: stored so the consumers' separate actions
+            // compute it once
+            QDocs(DocSet.wrap(Stored.once(ds.ds)))
           case _ => value
         }
         val out = (cached, sortBelow)

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Stored
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -97,12 +98,12 @@ object SearchRead {
       } finally driver.close()
 
     // PIT lifecycle (reference :740 deletes its PIT when the read ends):
-    // every frame that pages under the snapshot is materialized with an
-    // EAGER localCheckpoint — severing the lineage so no later
-    // recomputation can touch a released PIT — and the finally below
-    // deletes the PIT exactly once, on success or failure. The read is
-    // therefore eager like the reference's, and the checkpoint doubles as
-    // the cache the multi-referenced reconstruct path needs.
+    // every frame that pages under the snapshot is stored at once
+    // (`Stored.now`) so no later recomputation can touch a released PIT,
+    // and the finally below deletes the PIT exactly once, on success or
+    // failure. The read is therefore eager like the reference's, and the
+    // stored frame doubles as the cache the multi-referenced reconstruct
+    // path needs.
     try {
       val matched: Dataset[Document] = query match {
         case knn: SearchQuery.Knn =>
@@ -118,7 +119,7 @@ object SearchRead {
           val sf = sourceFields
           // one partition per slice, no shuffle; the body still drains every
           // id in its partition so a repartitioned plan stays correct
-          spark.range(0, ns, 1, ns).mapPartitions { it =>
+          Stored.now(spark.range(0, ns, 1, ns).mapPartitions { it =>
             if (!it.hasNext) Iterator.empty
             else {
               val client = factory.open()
@@ -141,19 +142,19 @@ object SearchRead {
               } finally client.close()
               out.iterator
             }
-          }(DocSet.docEnc).localCheckpoint()
+          }(DocSet.docEnc))
       }
 
       if (!reconstruct) new DocSet(matched)
       else {
         import spark.implicits._
-        // already checkpointed above: multi-referenced below (parents,
+        // already stored above: multi-referenced below (parents,
         // scores, matched-parent rows) without re-reading the index
         val m = matched
         // phase B: every record belonging to a matched parent, fetched in
         // 100-parent terms batches, 500-row pages (reference :240-247)
         val parentKeys = m.map(d => d.parentId.getOrElse(d.docId)).distinct()
-        val siblings: Dataset[Document] = parentKeys.mapPartitions { it =>
+        val siblings: Dataset[Document] = Stored.now(parentKeys.mapPartitions { it =>
           if (!it.hasNext) Iterator.empty
           else {
             val client = factory.open()
@@ -186,7 +187,7 @@ object SearchRead {
             } finally client.close()
             out.iterator
           }
-        }(DocSet.docEnc).localCheckpoint()
+        }(DocSet.docEnc))
         reconstructFrom(m, siblings)
       }
     } finally {

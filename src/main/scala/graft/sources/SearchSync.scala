@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Stored
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -114,11 +115,10 @@ object SearchSync {
    * records may spread across write partitions — safe, because the clear
    * happened wholesale in pass 1. Returns (loadedParents, deletedParents).
    */
-  def sync(docs: DocSet, factory: SearchClientFactory, index: String): (Long, Long) = {
+  def sync(docs: DocSet, factory: SearchClientFactory, index: String): (Long, Long) = Stored.scoped {
     val spark = docs.spark
     import spark.implicits._
-    val plan = diff(docs, factory, index)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val plan = Stored.cached(diff(docs, factory, index))
     val loads = plan.where(col("action") === "load").select("parent")
     val nDel = plan.where(col("action") === "delete").count()
     val nLoad = loads.count()
@@ -152,7 +152,6 @@ object SearchSync {
         finally client.close()
       }
     }
-    plan.unpersist()
     (nLoad, nDel)
   }
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Stored
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -144,21 +145,19 @@ object DocStream {
     val spark = batch.spark
     val df = batch.toDF
     // the sketch is the hot path: compute each doc's signature ONCE,
-    // checkpoint it, and drive BOTH the within-batch dedup and the
+    // store it, and drive BOTH the within-batch dedup and the
     // cross-batch log join from the same frame (an earlier version ran
     // minhashLsh then re-sketched its output — two full sketch passes per
     // micro-batch). The id universe comes from sig, NOT the banded
     // explode: a null-signature doc (null text — e.g. binary-only media
     // documents) yields zero banded rows and is always KEPT, never
     // silently collapsed or dropped.
-    val sigCk = df.select(col("docId").as("_id"),
+    val sigCk = Stored.now(df.select(col("docId").as("_id"),
       gf.minhashSignature(
-        gf.wordShingles(col("textRepresentation"), shingleSize), numHashes).as("_sig"))
-      .localCheckpoint()
+        gf.wordShingles(col("textRepresentation"), shingleSize), numHashes).as("_sig")))
     // (1) within-batch greedy dedup, identical semantics to the batch path
     // (minhashLshKeepIds IS the batch operator's keep-set, over our sigs)
-    val intraKeep = Dedup.minhashLshKeepIds(sigCk, "_id", numHashes, bands, threshold)
-      .localCheckpoint() // consumed by the banded join AND the kept-id anti-join
+    val intraKeep = Stored.now(Dedup.minhashLshKeepIds(sigCk, "_id", numHashes, bands, threshold))
     val banded = sigCk.join(intraKeep, Seq("_id"), "left_semi")
       .where(col("_sig").isNotNull)
       .select(col("_id"), col("_sig"), Dedup.bandKeys(col("_sig"), numHashes, bands))
@@ -192,10 +191,9 @@ object DocStream {
         Dedup.slotMatch(col("_sig"), col("_storeSig"), numHashes) >= threshold)
       .select(col("_id")).distinct()
     // keptIds is consumed by BOTH the log write and the kept-docs join —
-    // checkpoint the (small, id-only) set so the store join runs once
-    val keptIds = intraKeep.distinct()
-      .join(dropped, Seq("_id"), "left_anti")
-      .localCheckpoint()
+    // store the (small, id-only) set so the store join runs once
+    val keptIds = Stored.now(intraKeep.distinct()
+      .join(dropped, Seq("_id"), "left_anti"))
     // (3) log the kept signatures, then emit the kept documents
     banded.join(keptIds, Seq("_id"), "left_semi")
       .select(col("_band"), col("_sig"), col("_id"))
@@ -419,10 +417,12 @@ object DocStream {
       .option("checkpointLocation", checkpoint)
 
   /** foreachBatch bridge: run any BATCH DocSet stage (including sinks the
-    * streaming planner cannot host) per micro-batch. */
+    * streaming planner cannot host) per micro-batch. Each batch runs in a
+    * `Stored` scope of its own: it runs on the stream's thread, which no
+    * caller's scope covers, and nothing it stores outlives the batch. */
   def foreachDocBatch(docs: DocSet, checkpoint: String)
                      (f: (DocSet, Long) => Unit): DataStreamWriter[Document] =
     docs.ds.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch((ds: Dataset[Document], id: Long) => f(DocSet.wrap(ds), id))
+      .foreachBatch((ds: Dataset[Document], id: Long) => Stored.scoped(f(DocSet.wrap(ds), id)))
 }

@@ -1,12 +1,16 @@
 package graft
 
 import java.nio.file.Files
+import graft.operators.Preference
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import org.json4s._
 import org.json4s.jackson.JsonMethods.parse
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The harness the gate mains share. No test calls a main: each main stops
-  * the session it runs in. */
+/** The harness the gate mains share, and the `Stored` scopes it runs each
+  * gate in. No test calls a main: each main stops the session it runs in. */
 class GateHarnessSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
 
@@ -36,16 +40,101 @@ class GateHarnessSpec extends AnyFunSuite {
     assert(parse(s"{$lit: $lit}") == JObject(s -> JString(s)))
   }
 
-  test("sweep unpersists every persistent RDD and returns how many it released") {
-    val sc = spark.sparkContext
-    // what earlier suites left persisted is held weakly, so a GC could drop
-    // some of it mid-test: sweep it first and count only `kept`, held here
-    GateHarness.sweep(spark)
-    val kept = Seq(sc.parallelize(1 to 10).cache(), spark.range(5).rdd.localCheckpoint())
-    kept.foreach(_.count())
-    assert(GateHarness.sweep(spark) == kept.size)
-    assert(sc.getPersistentRDDs.isEmpty)
-    assert(GateHarness.sweep(spark) == 0)
+  /** Persistent RDD ids of the session that are not in `before`. */
+  private def storedSince(before: collection.Set[Int]): collection.Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet -- before
+
+  test("a Stored scope releases what it stored and returns how many it released") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    var cachedFrame: DataFrame = null
+    val (rows, released) = Stored.counted {
+      val eager = Stored.now(spark.range(10).toDF("x"))
+      val lazyCut = Stored.once(spark.range(5).toDF("x"))
+      cachedFrame = Stored.cached(spark.range(7).toDF("y"))
+      val rows = eager.count() + lazyCut.count() + cachedFrame.count()
+      assert(storedSince(before).size == 3)
+      assert(cachedFrame.storageLevel != StorageLevel.NONE)
+      rows
+    }
+    assert(rows == 22 && released == 3)
+    assert(storedSince(before).isEmpty)
+    // the cache entry goes too, not just its blocks
+    assert(cachedFrame.storageLevel == StorageLevel.NONE)
+    assert(Stored.counted(spark.range(3).count()) == ((3L, 0)))
+  }
+
+  test("a Stored scope releases what it stored when its block throws") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[IllegalStateException](Stored.scoped {
+      Stored.now(spark.range(4).toDF("x")).count()
+      throw new IllegalStateException("boom")
+    })
+    assert(storedSince(before).isEmpty)
+  }
+
+  test("a nested Stored scope releases only its own stores") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Stored.scoped {
+      val outer = Stored.now(spark.range(6).toDF("x"))
+      val (_, inner) = Stored.counted(Stored.now(spark.range(3).toDF("x")).count())
+      assert(inner == 1)
+      // the outer frame is still stored and readable
+      assert(storedSince(before).size == 1)
+      assert(outer.count() == 6 && outer.count() == 6)
+    }
+    assert(storedSince(before).isEmpty)
+  }
+
+  test("a Stored scope never releases another thread's stores") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val stored = new java.util.concurrent.CountDownLatch(1)
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    @volatile var rows = -1L
+    val other = new Thread(() => Stored.scoped {
+      val mine = Stored.now(spark.range(8).toDF("x"))
+      stored.countDown()
+      closed.await()
+      // read after the main thread's scope released its own store
+      rows = mine.count()
+    })
+    val (_, released) = Stored.counted {
+      Stored.now(spark.range(2).toDF("x")).count()
+      other.start()
+      stored.await()
+    }
+    assert(released == 1)
+    assert(storedSince(before).size == 1)
+    closed.countDown()
+    other.join()
+    assert(rows == 8)
+    assert(storedSince(before).isEmpty)
+  }
+
+  test("a frame an operator returns from its internal scope can be read twice after it returns") {
+    import spark.implicits._
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val pairs = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("a", "b")).toDF("w", "l")
+    val docs = Seq(("d1", 5L), ("d2", 3L), ("d3", 9L)).toDF("id", "n")
+    Stored.scoped {
+      // both operators release their intermediates in a scope of their own
+      // before they return; their results pass to this scope
+      val ranked = Preference.bradleyTerry(pairs, "w", "l", iters = 2)
+      val packed = graft.operators.Packing.packSequences(docs, "id", col("n"), 4)
+      val first = (ranked.collect().toSeq, packed.orderBy("id").collect().toSeq)
+      assert(first._1.map(_.getString(0)) == Seq("a", "b", "c"))
+      assert(first._2.map(_.getAs[Long]("tok_end")) == Seq(5L, 8L, 17L))
+      assert((ranked.collect().toSeq, packed.orderBy("id").collect().toSeq) == first)
+    }
+    assert(storedSince(before).isEmpty)
+  }
+
+  test("runGate releases what the gate stored and reports a failing gate") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (ok, released) = GateHarness.runGate(spark, SparkFixture.sf0001, "q_pagerank")(_.count())
+    assert(ok.get > 0 && released > 0)
+    assert(storedSince(before).isEmpty)
+    val (failed, _) = GateHarness.runGate(spark, "/nonexistent_sf", "q_pagerank")(_.count())
+    assert(failed.isFailure)
   }
 
   test("Verify.dump removes every gate's old output, also of a gate that fails") {

@@ -15,4 +15,7 @@ object SparkFixture {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** The smallest scale factor of the generated gate inputs (TESTDATA.md). */
+  val sf0001 = "/root/testdata/sf0.001"
 }

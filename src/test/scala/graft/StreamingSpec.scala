@@ -593,6 +593,32 @@ class StreamingSpec extends AnyFunSuite {
     assert(whole == Seq("1", "3", "5"), s"uninterrupted kept $whole")
     assert(split == whole, s"restored run diverged: $split vs $whole")
   }
+
+  test("the streaming gates never change the caller's shuffle partitions") {
+    val sfDir = SparkFixture.sf0001
+    assume(new java.io.File(sfDir).isDirectory, s"$sfDir not present")
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    // any value but the streams' own sizing, min(defaultParallelism, 8)
+    val mine = (math.min(spark.sparkContext.defaultParallelism, 8) + 1).toString
+    spark.conf.set(key, mine)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var running = true
+    val poll = new Thread(() => while (running) { seen.add(spark.conf.get(key)); Thread.sleep(1) })
+    try {
+      poll.start()
+      for (gate <- Seq("q_stream_e2e", "q_stream_eviction")) {
+        val (done, _) = GateHarness.runGate(spark, sfDir, gate)(_.count())
+        assert(done.get > 0, gate)
+      }
+    } finally {
+      running = false
+      poll.join()
+      spark.conf.set(key, prev)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSet == Set(mine))
+  }
 }
 
 /** JVM-static per-run sinks for foreachBatch restore tests (closures are
